@@ -387,8 +387,8 @@ def duplicate_clusters_star(
     # whole cost (measured ~2 s/round on a 246-edge graph).  Each round
     # coalesces its output to ceil(edges / _STAR_EDGES_PER_PART) parts
     # (capped by the session width, so a billion-edge graph keeps full
-    # parallelism) and the lazy checkpoint is materialized by the
-    # signature action — one job per round instead of two.
+    # parallelism).  The round's localCheckpoint() is eager, so it runs
+    # its own job; the signature action then reads the checkpointed edges.
     sess_parts = int(
         pairs.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
@@ -455,7 +455,8 @@ def duplicate_clusters_star(
             .localCheckpoint()
         )
         # bit_xor, not sum: ANSI mode makes a sum of int64 hashes overflow.
-        # This action also materializes the lazy checkpoint above.
+        # This action reads E_new, which the eager checkpoint above has
+        # already materialized.
         sig = E_new.agg(
             F.count(F.lit(1)).alias("n"),
             F.bit_xor(F.xxhash64("u", "v")).alias("h"),

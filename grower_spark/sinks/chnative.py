@@ -1,4 +1,5 @@
-"""ClickHouse NATIVE TCP protocol client — pure stdlib, no packages.
+"""ClickHouse NATIVE TCP protocol client — stdlib sockets, numpy/pyarrow
+column encoding.
 
 The reference loads ClickHouse over the native protocol via
 clickhouse-go (`cmd/filelog/main.go:181-183`, `internal/repositories/
@@ -29,12 +30,18 @@ clickhouse-go, ch-go) that implement the same packets.  Layout summary:
 INSERT flow (the part the sink uses): send Query("INSERT INTO t (cols)
 VALUES") + an empty Data block (external-tables terminator) -> server
 replies with a SAMPLE Data block carrying the table's column names and
-types -> client serializes its rows per those server-declared types and
-sends one Data block per chunk -> an EMPTY Data block ends the insert ->
-server sends EndOfStream.  Because the server names the types, the
-client needs no type hints — same `insert(table, rows, column_names)`
-signature as the HTTP client, so `ClickHouseSink` takes either via
-`client_factory`.
+types -> client sends one Data block per chunk -> an EMPTY Data block
+ends the insert -> server sends EndOfStream.  Because the server names
+the types, the client needs no type hints — same `insert(table, rows,
+column_names)` signature as the HTTP client, so `ClickHouseSink` takes
+either via `client_factory`.
+
+Rows arrive as a pyarrow `RecordBatch` (the sink's `mapInArrow` path;
+row tuples are converted to one batch at `insert`), and `encode_column`
+writes each Arrow column in the server-declared type with numpy: fixed
+widths via `astype` after a range check, DateTime/Date from
+timestamp/date arrays, String as vectorised varint length prefixes
+scattered around the data buffer, Nullable masks from Arrow validity.
 
 Compression (r12 verdict item 8): `compression="lz4"` negotiates
 compression on the Query packet and moves every Data-block body (both
@@ -58,6 +65,9 @@ import socket
 import struct
 from dataclasses import dataclass
 from typing import Optional, Sequence
+
+import numpy as np
+import pyarrow as pa
 
 # --- client/server packet codes (public protocol constants) ---
 CLIENT_HELLO = 0
@@ -320,16 +330,20 @@ class CompressedBlockReader(Reader):
 
 # --------------------------------------------------------------------------
 # column codecs (the sink's DDL surface: spark_to_clickhouse_type output
-# plus Nullable) — encode rows column-wise into native block layout
+# plus Nullable) — a column arrives as a pyarrow array and is encoded into
+# native block layout with numpy, one column at a time
 # --------------------------------------------------------------------------
 
-_FIXED_FMT = {
-    "UInt8": "<B", "UInt16": "<H", "UInt32": "<I", "UInt64": "<Q",
-    "Int8": "<b", "Int16": "<h", "Int32": "<i", "Int64": "<q",
-    "Float32": "<f", "Float64": "<d",
-    "Date": "<H",        # days since epoch
-    "DateTime": "<I",    # seconds since epoch
+# numpy dtype of each fixed-width type on the wire
+_FIXED_DTYPE = {
+    "UInt8": "<u1", "UInt16": "<u2", "UInt32": "<u4", "UInt64": "<u8",
+    "Int8": "<i1", "Int16": "<i2", "Int32": "<i4", "Int64": "<i8",
+    "Float32": "<f4", "Float64": "<f8",
+    "Date": "<u2",       # days since epoch
+    "DateTime": "<u4",   # seconds since epoch
 }
+_TICKS_PER_SECOND = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}
+_SECONDS_PER_DAY = 86400
 
 
 def _fixed_string_n(t: str) -> Optional[int]:
@@ -338,54 +352,175 @@ def _fixed_string_n(t: str) -> Optional[int]:
     return None
 
 
-def _encode_value(t: str, v) -> bytes:
-    if t == "String":
-        return write_string("" if v is None else
-                            (v if isinstance(v, (str, bytes)) else str(v)))
-    n = _fixed_string_n(t)
-    if n is not None:
-        b = (v or "").encode("utf-8") if not isinstance(v, bytes) else v
-        if len(b) > n:
-            # A real server rejects oversize FixedString inserts ("Too
-            # large value for FixedString(N)") and the HTTP path would
-            # surface that error — silently truncating here would store
-            # corrupted data instead.  NB the caster's FixedString plan
-            # truncates to N CHARACTERS; multi-byte UTF-8 can still
-            # exceed N BYTES, which is exactly the case that must fail
-            # loudly rather than ship a mangled code point.
+def _to_arrow(values) -> pa.Array:
+    """A column as a pyarrow array; Python sequences go through pyarrow's
+    type inference, except that ints beyond Int64 can only be UInt64."""
+    if isinstance(values, pa.Array):
+        return values
+    values = list(values)
+    try:
+        return pa.array(values)
+    except OverflowError:
+        return pa.array(values, pa.uint64())
+
+
+def _rows_to_batch(rows: Sequence[tuple],
+                  column_names: Sequence[str]) -> pa.RecordBatch:
+    """Row tuples (positional per ``column_names``) as one record batch."""
+    columns = list(zip(*rows)) if rows else [()] * len(column_names)
+    if len(columns) != len(column_names):
+        raise ValueError(
+            f"rows have {len(columns)} values, expected {len(column_names)}"
+        )
+    return pa.RecordBatch.from_arrays([_to_arrow(c) for c in columns],
+                                      names=list(column_names))
+
+
+def _ints(arr: pa.Array) -> np.ndarray:
+    return arr.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
+
+
+def _numbers(type_name: str, arr: pa.Array) -> np.ndarray:
+    """The values the column stores, as a numpy array still in the source
+    precision; nulls become 0 (Nullable writes a default under its mask).
+    Timestamps are read as epoch ticks, so a naive one counts as UTC (as
+    Spark's are: this repo's sessions run UTC); DateTime truncates them
+    to whole seconds toward zero."""
+    t = arr.type
+    if pa.types.is_timestamp(t) and type_name in ("DateTime", "Date"):
+        ticks = _ints(arr)
+        per_s = _TICKS_PER_SECOND[t.unit]
+        if type_name == "Date":
+            return ticks // (per_s * _SECONDS_PER_DAY)
+        return np.sign(ticks) * (np.abs(ticks) // per_s)
+    if pa.types.is_date(t) and type_name == "Date":
+        return _ints(arr.cast(pa.date32()).cast(pa.int32()))
+    if pa.types.is_null(t):
+        return np.zeros(len(arr), np.int64)
+    if pa.types.is_boolean(t):
+        arr = arr.cast(pa.uint8())
+    elif pa.types.is_decimal(t):
+        dtype = np.dtype(_FIXED_DTYPE[type_name])
+        try:
+            arr = arr.cast(pa.float64() if dtype.kind == "f"
+                           else pa.from_numpy_dtype(dtype))
+        except pa.ArrowInvalid as exc:
             raise ProtocolError(
-                f"value of {len(b)} bytes too large for {t} "
-                f"(ClickHouse would reject this insert): {b[:32]!r}..."
+                f"value out of range for {type_name}: {exc}") from None
+    elif not (pa.types.is_integer(t) or pa.types.is_floating(t)):
+        raise ProtocolError(f"cannot write {t} values to a {type_name} column")
+    return arr.fill_null(0).to_numpy(zero_copy_only=False)
+
+
+def _encode_fixed(type_name: str, arr: pa.Array) -> bytes:
+    dtype = np.dtype(_FIXED_DTYPE[type_name])
+    values = _numbers(type_name, arr)
+    if dtype.kind == "f":
+        with np.errstate(over="ignore"):
+            out = values.astype(dtype)
+        if np.any(np.isinf(out) & np.isfinite(values)):
+            raise ProtocolError(f"value out of range for {type_name}")
+        return out.tobytes()
+    if values.dtype.kind == "f":
+        if not np.all(np.isfinite(values)):
+            raise ProtocolError(f"non-finite value out of range for {type_name}")
+        values = np.trunc(values)
+    if len(values):
+        info = np.iinfo(dtype)
+        lo, hi = int(values.min()), int(values.max())
+        if lo < info.min or hi > info.max:
+            bad = lo if lo < info.min else hi
+            raise ProtocolError(
+                f"value {bad} out of range for {type_name} "
+                f"[{info.min}, {info.max}]"
             )
-        return b.ljust(n, b"\x00")
-    fmt = _FIXED_FMT.get(t)
-    if fmt is None:
-        raise ProtocolError(f"unsupported ClickHouse column type {t!r}")
-    if v is None:
-        v = 0  # Nullable writes a default under the null mask
-    if t == "DateTime" and hasattr(v, "timestamp"):
-        if getattr(v, "tzinfo", None) is None:
-            # Spark collects session-tz-naive datetimes and this repo's
-            # sessions run UTC — a naive .timestamp() would silently
-            # apply the PROCESS timezone instead
-            import datetime as _dt
-
-            v = v.replace(tzinfo=_dt.timezone.utc)
-        v = int(v.timestamp())
-    if t == "Date" and hasattr(v, "toordinal"):
-        v = v.toordinal() - 719163  # days since 1970-01-01
-    if t.startswith(("UInt", "Int", "Date")):
-        v = int(v)
-    return struct.pack(fmt, v)
+    return values.astype(dtype).tobytes()
 
 
-def encode_column(type_name: str, values: Sequence) -> bytes:
-    """Column-wise native encoding; recursive for Nullable(T)."""
+def _byte_strings(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(per-value byte lengths, the values' bytes back to back) of a
+    string column, honouring the array's offset; nulls read as empty and
+    non-string values as their string form."""
+    t = arr.type
+    if not (pa.types.is_string(t) or pa.types.is_binary(t)
+            or pa.types.is_large_string(t) or pa.types.is_large_binary(t)):
+        arr = arr.cast(pa.string())
+        t = arr.type
+    if arr.null_count:
+        arr = arr.fill_null(pa.scalar(b"", pa.binary()).cast(t))
+    large = pa.types.is_large_string(t) or pa.types.is_large_binary(t)
+    _, offsets_buf, data_buf = arr.buffers()
+    offsets = np.frombuffer(offsets_buf, np.int64 if large else np.int32,
+                            count=arr.offset + len(arr) + 1)[arr.offset:]
+    data = (np.frombuffer(data_buf, np.uint8) if data_buf is not None
+            else np.zeros(0, np.uint8))
+    return np.diff(offsets), data[offsets[0]:offsets[-1]]
+
+
+def _encode_strings(arr: pa.Array) -> bytes:
+    """String: each value as a LEB128 length then its bytes.  The prefixes
+    are computed together and scattered around the data in one pass."""
+    lens, data = _byte_strings(arr)
+    lens = lens.astype(np.uint64)
+    # bytes per prefix: 1 + one more per 7 bits beyond the first 7
+    width = np.ones(len(lens), np.int64)
+    for bits in range(7, 64, 7):
+        width += lens >= (1 << bits)
+    starts = np.zeros(len(lens), np.int64)
+    np.cumsum((width + lens.astype(np.int64))[:-1], out=starts[1:])
+    out = np.empty(len(data) + int(width.sum()), np.uint8)
+    is_prefix = np.zeros(len(out), bool)
+    for k in range(int(width.max()) if len(lens) else 0):
+        rows = width > k
+        at = starts[rows] + k
+        byte = (lens[rows] >> np.uint64(7 * k)) & np.uint64(0x7F)
+        more = (width[rows] > k + 1).astype(np.uint64) << np.uint64(7)
+        out[at] = byte | more
+        is_prefix[at] = True
+    out[~is_prefix] = data
+    return out.tobytes()
+
+
+def _encode_fixed_strings(type_name: str, n: int, arr: pa.Array) -> bytes:
+    """FixedString(N): each value's bytes zero-padded to N."""
+    lens, data = _byte_strings(arr)
+    over = np.flatnonzero(lens > n)
+    if len(over):
+        # A real server rejects oversize FixedString inserts ("Too
+        # large value for FixedString(N)") and the HTTP path would
+        # surface that error — silently truncating here would store
+        # corrupted data instead.  NB the caster's FixedString plan
+        # truncates to N CHARACTERS; multi-byte UTF-8 can still
+        # exceed N BYTES, which is exactly the case that must fail
+        # loudly rather than ship a mangled code point.
+        start = int(lens[:over[0]].sum())
+        b = data[start:start + int(lens[over[0]])].tobytes()
+        raise ProtocolError(
+            f"value of {len(b)} bytes too large for {type_name} "
+            f"(ClickHouse would reject this insert): {b[:32]!r}..."
+        )
+    out = np.zeros((len(lens), n), np.uint8)
+    out[np.arange(n) < lens[:, None]] = data
+    return out.tobytes()
+
+
+def encode_column(type_name: str, values) -> bytes:
+    """Native encoding of one column (a pyarrow array, or a Python
+    sequence converted once by ``_to_arrow``); recursive for Nullable(T),
+    whose null mask comes from the array's validity."""
+    arr = _to_arrow(values)
     if type_name.startswith("Nullable(") and type_name.endswith(")"):
-        inner = type_name[len("Nullable("):-1]
-        mask = bytes(1 if v is None else 0 for v in values)
-        return mask + encode_column(inner, values)
-    return b"".join(_encode_value(type_name, v) for v in values)
+        mask = arr.is_null().to_numpy(zero_copy_only=False)
+        return mask.view(np.uint8).tobytes() + encode_column(
+            type_name[len("Nullable("):-1], arr)
+    if type_name == "String":
+        return _encode_strings(arr)
+    n = _fixed_string_n(type_name)
+    if n is not None:
+        return _encode_fixed_strings(type_name, n, arr)
+    if type_name not in _FIXED_DTYPE:
+        raise ProtocolError(f"unsupported ClickHouse column type {type_name!r}")
+    return _encode_fixed(type_name, arr)
 
 
 def decode_column(type_name: str, n_rows: int, r: Reader) -> list:
@@ -404,12 +539,11 @@ def decode_column(type_name: str, n_rows: int, r: Reader) -> list:
             r.read(n).rstrip(b"\x00").decode("utf-8", errors="replace")
             for _ in range(n_rows)
         ]
-    fmt = _FIXED_FMT.get(type_name)
-    if fmt is None:
+    dtype = _FIXED_DTYPE.get(type_name)
+    if dtype is None:
         raise ProtocolError(f"unsupported ClickHouse column type {type_name!r}")
-    size = struct.calcsize(fmt)
-    raw = r.read(size * n_rows)
-    return [struct.unpack_from(fmt, raw, i * size)[0] for i in range(n_rows)]
+    size = np.dtype(dtype).itemsize
+    return np.frombuffer(r.read(size * n_rows), dtype).tolist()
 
 
 # --------------------------------------------------------------------------
@@ -417,10 +551,11 @@ def decode_column(type_name: str, n_rows: int, r: Reader) -> list:
 # --------------------------------------------------------------------------
 
 
-def encode_block(columns: Sequence[tuple[str, str, Sequence]],
+def encode_block(columns: Sequence[tuple[str, str, "pa.Array | Sequence"]],
                  revision: int) -> bytes:
-    """``columns`` is [(name, type, values)]; an empty list encodes the
-    empty block that terminates inserts/external tables."""
+    """``columns`` is [(name, type, values)], values being a pyarrow array
+    or a Python sequence (see ``encode_column``); an empty list encodes
+    the empty block that terminates inserts/external tables."""
     out = bytearray()
     if revision >= REV_BLOCK_INFO:
         # BlockInfo: field 1 (is_overflows: u8), field 2 (bucket_num:
@@ -783,11 +918,13 @@ class NativeClickHouseClient:
             self._reset_on_transport_error(exc)
             raise
 
-    def insert(self, table: str, rows: Sequence[tuple],
+    def insert(self, table: str, rows: "pa.RecordBatch | Sequence[tuple]",
                column_names: Sequence[str]) -> None:
-        """Native insert: the server's sample block names the column
-        types, so the wire layout is authoritative — no client-side type
-        hints (same signature as the HTTP client).
+        """Native insert of ``rows``: a pyarrow ``RecordBatch`` holding
+        (at least) the columns in ``column_names``, or row tuples, which
+        are converted to one batch here.  The server's sample block names
+        the column types, so the wire layout is authoritative — no
+        client-side type hints (same signature as the HTTP client).
 
         Error discipline differs from command()/query() here: a server
         Exception that arrives MID-INSERT (after the Query packet,
@@ -797,13 +934,15 @@ class NativeClickHouseClient:
         closes the connection and the sink's retry reconnects cleanly.
         The keep-connection-after-Exception invariant only holds at
         clean packet boundaries (DDL, ping, SELECT)."""
+        if not isinstance(rows, pa.RecordBatch):
+            rows = _rows_to_batch(rows, column_names)
         try:
             self._insert(table, rows, column_names)
         except Exception:
             self.close()
             raise
 
-    def _insert(self, table: str, rows: Sequence[tuple],
+    def _insert(self, table: str, batch: pa.RecordBatch,
                 column_names: Sequence[str]) -> None:
         self.connect()
         cols = ", ".join(f"`{c}`" for c in column_names)
@@ -829,7 +968,7 @@ class NativeClickHouseClient:
                 f"server sample block lacks insert columns {missing}; "
                 f"has {sorted(types)}"
             )
-        for lo in range(0, len(rows), self.insert_chunk_rows):
+        for lo in range(0, batch.num_rows, self.insert_chunk_rows):
             # A server that raises mid-insert (quota, oversize value,
             # read-only table) sends an Exception packet and stops
             # reading; blindly sendall-ing every remaining chunk would
@@ -841,12 +980,10 @@ class NativeClickHouseClient:
             while (self._reader.pending()
                    or _select.select([self._sock], [], [], 0)[0]):
                 self._read_packet(self._reader)
-            chunk = rows[lo:lo + self.insert_chunk_rows]
-            block = [
-                (c, types[c], [row[i] for row in chunk])
-                for i, c in enumerate(column_names)
-            ]
-            self._write_data_block(block)
+            chunk = batch.slice(lo, self.insert_chunk_rows)
+            self._write_data_block(
+                [(c, types[c], chunk.column(c)) for c in column_names]
+            )
         self._write_data_block([])  # end of insert
         while True:
             code, _ = self._read_packet(self._reader)

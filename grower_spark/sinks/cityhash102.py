@@ -37,6 +37,8 @@ data — it refuses the stream.
 
 from __future__ import annotations
 
+import struct
+
 _MASK64 = (1 << 64) - 1
 
 K0 = 0xC3A5C85C97CB3127
@@ -153,25 +155,38 @@ def cityhash128_with_seed(s: bytes, seed_lo: int, seed_hi: int):
     v1 = (_rot(v0, 42) * K1 + _fetch64(s, 8)) & _MASK64
     w0 = (_rot((y + z) & _MASK64, 35) * K1 + x) & _MASK64
     w1 = (_rot((x + _fetch64(s, 88)) & _MASK64, 53) * K1) & _MASK64
-    i = 0
-    remaining = n
-    while True:
-        # inner loop manually unrolled x2 in city.cc; kept for shape
-        for _ in range(2):
-            x = (_rot((x + y + v0 + _fetch64(s, i + 16)) & _MASK64, 37)
-                 * K1) & _MASK64
-            y = (_rot((y + v1 + _fetch64(s, i + 48)) & _MASK64, 42)
-                 * K1) & _MASK64
-            x ^= w1
-            y ^= v0
-            z = _rot(z ^ w0, 33)
-            v0, v1 = _weak32(s, i, (v1 * K1) & _MASK64, (x + w0) & _MASK64)
-            w0, w1 = _weak32(s, i + 32, (z + w1) & _MASK64, y)
-            z, x = x, z
-            i += 64
-        remaining -= 128
-        if remaining < 128:
-            break
+    # Every fetch of the 128-byte laps is 8-byte aligned, so the laps read
+    # words unpacked once; _rot and _weak32 are inlined with their shift
+    # counts.  Each pass below is one half of city.cc's x2-unrolled lap.
+    m, k1 = _MASK64, K1
+    words = struct.unpack_from("<%dQ" % (n // 128 * 16), s)
+    lanes = [iter(words)] * 8
+    for f0, f1, f2, f3, f4, f5, f6, f7 in zip(*lanes):
+        t = (x + y + v0 + f2) & m
+        x = ((((t >> 37) | (t << 27)) & m) * k1) & m
+        t = (y + v1 + f6) & m
+        y = ((((t >> 42) | (t << 22)) & m) * k1) & m
+        x ^= w1
+        y ^= v0
+        t = z ^ w0
+        z = ((t >> 33) | (t << 31)) & m
+        # v0, v1 = _weak32 of f0..f3 with a = v1 * K1, b = x + w0
+        a = (v1 * k1 + f0) & m
+        t = (x + w0 + a + f3) & m
+        c = a
+        a = (a + f1 + f2) & m
+        v0 = (a + f3) & m
+        v1 = ((((t >> 21) | (t << 43)) + ((a >> 44) | (a << 20))) + c) & m
+        # w0, w1 = _weak32 of f4..f7 with a = z + w1, b = y
+        a = (z + w1 + f4) & m
+        t = (y + a + f7) & m
+        c = a
+        a = (a + f5 + f6) & m
+        w0 = (a + f7) & m
+        w1 = ((((t >> 21) | (t << 43)) + ((a >> 44) | (a << 20))) + c) & m
+        z, x = x, z
+    i = len(words) * 8
+    remaining = n - i
     y = (y + _rot(w0, 37) * K0 + z) & _MASK64
     x = (x + _rot((v0 + z) & _MASK64, 49) * K0) & _MASK64
     # 0 < remaining < 128: up to four 32-byte chunks taken from the END,

@@ -7,23 +7,27 @@ compression, per-insert ``max_execution_time``, columns named explicitly.
 
 Spark-native mapping: Structured Streaming's micro-batch IS the buffer —
 ``trigger(processingTime=flush_interval)`` bounds latency and the batch
-admission options bound size; ``foreachBatch`` delivers each batch to an
-insert function that writes per-partition with app-level retry.  Unlike
-the reference's in-memory buffer (data loss on crash, SURVEY.md §4.2),
-checkpointing + a replayable source upgrades delivery to at-least-once.
+admission options bound size; ``foreachBatch`` delivers each batch to
+``ClickHouseSink``, which hands every partition to the client as Arrow
+record batches (``mapInArrow``), sliced to ``insert_chunk`` rows, with
+app-level retry per chunk.  Unlike the reference's in-memory buffer (data
+loss on crash, SURVEY.md §4.2), checkpointing + a replayable source
+upgrades delivery to at-least-once.
 
 The client is injectable — anything with ``insert(table, rows,
-column_names)`` works — and two real options ship here:
+column_names)`` taking a pyarrow ``RecordBatch`` as ``rows`` works — and
+two real options ship:
 
-- ``HttpClickHouseClient`` (this module): stdlib-only client speaking
+- ``HttpClickHouseClient`` (this module): stdlib HTTP client speaking
   ClickHouse's public HTTP interface (``POST /?query=INSERT ... FORMAT
   TabSeparated`` with TSV body, settings as URL params, credentials via
-  ``X-ClickHouse-User``/``Key`` headers) — zero dependencies, testable
+  ``X-ClickHouse-User``/``Key`` headers) — testable
   against an in-process fake server, and a legitimate production path
   (the HTTP interface is ClickHouse's canonical second protocol).
-- a ``clickhouse_connect`` client (absent in this container): pass its
-  factory for native-protocol + LZ4, matching the reference's
-  clickhouse-go wiring.
+- ``NativeClickHouseClient`` (``sinks/chnative.py``): the native TCP
+  protocol with optional LZ4 frames, matching the reference's
+  clickhouse-go wiring; it encodes each Arrow column into a native block
+  with numpy.
 """
 
 from __future__ import annotations
@@ -36,6 +40,7 @@ import urllib.request
 from dataclasses import dataclass, field
 from typing import Callable, Optional, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 
@@ -146,7 +151,12 @@ class HttpClickHouseClient:
         """Run a statement with no data body (DDL, SET, ...)."""
         self._post(sql)
 
-    def insert(self, table: str, rows: Sequence[tuple], column_names: Sequence[str]) -> None:
+    def insert(self, table: str, rows: "pa.RecordBatch | Sequence[tuple]",
+               column_names: Sequence[str]) -> None:
+        """``rows`` is a pyarrow ``RecordBatch``, read column by column, or
+        row tuples positional per ``column_names``."""
+        if isinstance(rows, pa.RecordBatch):
+            rows = zip(*(rows.column(c).to_pylist() for c in column_names))
         cols = ", ".join(f"`{c}`" for c in column_names)
         query = f"INSERT INTO {table} ({cols}) FORMAT TabSeparated"
         body = "".join(
@@ -194,9 +204,13 @@ def spark_to_clickhouse_type(spark_type: str) -> str:
 class ClickHouseSink:
     """``foreachBatch`` writer with named columns and retry-with-backoff.
 
-    ``client_factory`` is called once per executor-partition task (the
-    client is not serializable); inserts are chunked to ``insert_chunk``
-    rows so one giant micro-batch cannot create one giant INSERT.
+    ``foreach_batch`` selects ``columns`` and runs ``insert_partition`` on
+    every partition through ``mapInArrow``, so each partition arrives as
+    an iterator of pyarrow ``RecordBatch``es and no row is built in
+    Python.  ``client_factory`` is called once per partition task (the
+    client is not serializable); each batch is sliced into chunks of at
+    most ``insert_chunk`` rows, so one giant micro-batch cannot create one
+    giant INSERT, and a failed chunk is retried on its own.
     """
 
     table: str
@@ -207,19 +221,17 @@ class ClickHouseSink:
     insert_chunk: int = 10000
     settings: dict = field(default_factory=lambda: {"max_execution_time": 30})
 
-    def insert_partition(self, rows_iter) -> None:
+    def insert_partition(self, batches) -> None:
+        """Insert one partition, given as an iterator of pyarrow
+        ``RecordBatch``es, in chunks of at most ``insert_chunk`` rows
+        (zero-copy slices), each chunk retried on its own."""
         client = self.client_factory()
-        cols = list(self.columns)
-        buf: list[tuple] = []
-        for row in rows_iter:
-            buf.append(tuple(row[c] for c in cols))
-            if len(buf) >= self.insert_chunk:
-                self._insert_with_retry(client, buf)
-                buf = []
-        if buf:
-            self._insert_with_retry(client, buf)
+        for batch in batches:
+            for lo in range(0, batch.num_rows, self.insert_chunk):
+                self._insert_with_retry(client,
+                                        batch.slice(lo, self.insert_chunk))
 
-    def _insert_with_retry(self, client, rows: list[tuple]) -> None:
+    def _insert_with_retry(self, client, rows: pa.RecordBatch) -> None:
         attempt = 0
         while True:
             try:
@@ -236,8 +248,15 @@ class ClickHouseSink:
         callable directly with a batch DataFrame for batch mode)."""
         sink = self
 
+        def insert(batches):
+            sink.insert_partition(batches)
+            return iter(())
+
         def write(batch_df: DataFrame, batch_id: int = 0) -> None:
-            batch_df.select(*sink.columns).foreachPartition(sink.insert_partition)
+            # mapInArrow hands each partition over as Arrow record batches;
+            # the function yields nothing, and collect() runs the job
+            batch_df.select(*sink.columns).mapInArrow(
+                insert, "inserted long").collect()
 
         return write
 

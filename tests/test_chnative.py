@@ -495,19 +495,45 @@ def test_spark_foreach_partition_e2e(spark, native_server):
     assert flat == sorted((f"m{i}", i, i / 2.0) for i in range(20))
 
 
+def test_sink_arrow_partitions_chunked_into_blocks(spark, native_server):
+    """foreach_batch hands each of 3 partitions (25 rows each) to the
+    client as Arrow record batches; with insert_chunk=10 every partition
+    lands as blocks of 10, 10 and 5 rows, and every row exactly once —
+    including a timestamp column and a nullable one."""
+    df = spark.range(0, 75, numPartitions=3).selectExpr(
+        "concat('m', id) AS msg", "id AS n",
+        "timestamp_seconds(1700000000 + id) AS ts",
+        "IF(id % 4 = 0, NULL, id * 10) AS opt",
+    )
+    port = native_server.port
+    sink = ClickHouseSink(
+        table="logs.t",
+        columns=["msg", "n", "ts", "opt"],
+        client_factory=lambda: NativeClickHouseClient("127.0.0.1", port),
+        insert_chunk=10,
+    )
+    sink.foreach_batch()(df)
+    sizes = sorted(len(b[0][2]) for b in native_server.inserts)
+    assert sizes == [5] * 3 + [10] * 6
+    flat = sorted(t for b in native_server.inserts
+                  for t in zip(*[vals for _, _, vals in b]))
+    assert flat == [(f"m{i}", i, 1700000000 + i, None if i % 4 == 0 else i * 10)
+                    for i in sorted(range(75), key=lambda i: f"m{i}")]
+
+
 def test_fixed_string_oversize_raises():
     """r12 advice item 1: a real server rejects oversize FixedString
     inserts; silently truncating would store corrupted data.  The byte
     (not character) length is what counts — the caster truncates to N
     CHARACTERS, so multi-byte UTF-8 is exactly the sneaky case."""
-    from grower_spark.sinks.chnative import _encode_value
+    from grower_spark.sinks.chnative import encode_column
 
-    assert _encode_value("FixedString(3)", "ab") == b"ab\x00"
-    assert _encode_value("FixedString(3)", b"abc") == b"abc"
+    assert encode_column("FixedString(3)", ["ab"]) == b"ab\x00"
+    assert encode_column("FixedString(3)", [b"abc"]) == b"abc"
     with pytest.raises(ProtocolError, match="too large"):
-        _encode_value("FixedString(3)", "abcd")
+        encode_column("FixedString(3)", ["abcd"])
     with pytest.raises(ProtocolError, match="too large"):
-        _encode_value("FixedString(3)", "ééé")  # 3 chars, 6 UTF-8 bytes
+        encode_column("FixedString(3)", ["ééé"])  # 3 chars, 6 UTF-8 bytes
 
 
 def test_midinsert_exception_surfaces_and_stops_sending():

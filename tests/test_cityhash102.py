@@ -12,6 +12,10 @@ the frame layer refuses mismatched checksums (test_chnative.py)."""
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+
 import pytest
 
 from grower_spark.sinks.cityhash102 import (
@@ -178,3 +182,35 @@ def test_tail_backward_read_region_matters():
         mut = bytearray(b)
         mut[pos] ^= 0x80
         assert cityhash128(bytes(mut)) != ref, pos
+
+
+def _stream(n: int) -> bytes:
+    """Fixed pseudo-random bytes: SHA-256 of a little-endian counter."""
+    return b"".join(
+        hashlib.sha256(i.to_bytes(8, "little")).digest()
+        for i in range(n // 32 + 1)
+    )[:n]
+
+
+def _hex(pair: tuple) -> str:
+    return "%016x%016x" % pair
+
+
+def test_golden_outputs_recorded_from_reference_loop():
+    """``fixtures/cityhash102_golden.json`` holds outputs recorded from
+    the transcription before its long-input loop was vectorised: every
+    length 0-700 (all branches, tail sizes and unrolled laps), then 64 KiB
+    and 1 MiB (multi-lap, unaligned tail) through both entry points."""
+    with open(os.path.join(os.path.dirname(__file__), "fixtures",
+                           "cityhash102_golden.json")) as fh:
+        golden = json.load(fh)
+    s = _stream(1 << 20)
+    got = [_hex(cityhash128(s[:n])) for n in range(701)]
+    pairs = zip(got, golden["cityhash128"], strict=True)
+    bad = [n for n, (a, b) in enumerate(pairs) if a != b]
+    assert not bad, f"lengths differing from the recorded outputs: {bad}"
+    assert _hex(cityhash128(s[:1 << 16])) == golden["cityhash128_64k"]
+    assert _hex(cityhash128(s)) == golden["cityhash128_1m"]
+    assert (_hex(cityhash128_with_seed(s[:1 << 16], K2, K3))
+            == golden["with_seed_64k"])
+    assert _hex(cityhash128_with_seed(s, K2, K3)) == golden["with_seed_1m"]

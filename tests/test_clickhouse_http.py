@@ -13,6 +13,7 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import datetime
 
+import pyarrow as pa
 import pytest
 
 from grower_spark.sinks.clickhouse import (
@@ -166,7 +167,8 @@ def test_sink_retry_through_http_client(ch_server):
         client_factory=lambda: HttpClickHouseClient(ch_server),
         backoff_seconds=0.01,
     )
-    sink.insert_partition(iter([{"status": 200}, {"status": 404}]))
+    sink.insert_partition(
+        iter([pa.RecordBatch.from_pylist([{"status": 200}, {"status": 404}])]))
     assert len(_RECEIVED) == 2  # failed attempt + retry
     assert _RECEIVED[0]["body"] == _RECEIVED[1]["body"] == "200\n404\n"
 

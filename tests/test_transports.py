@@ -4,6 +4,7 @@ framing, dead-letter persistence."""
 
 import os
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
@@ -165,6 +166,11 @@ def test_rfc3164_extract(spark):
     assert pipeline.parse(df.select("value")).count() == 2
 
 
+def _row_tuples(batch, column_names):
+    """The rows of a sink-delivered RecordBatch as tuples in column order."""
+    return list(zip(*(batch.column(c).to_pylist() for c in column_names)))
+
+
 class FlakyClient:
     def __init__(self, fail_times=0):
         self.fail_times = fail_times
@@ -174,7 +180,8 @@ class FlakyClient:
         if self.fail_times > 0:
             self.fail_times -= 1
             raise RuntimeError("transient")
-        self.inserts.append((table, list(rows), list(column_names)))
+        self.inserts.append(
+            (table, _row_tuples(rows, column_names), list(column_names)))
 
 
 def test_clickhouse_sink_batches_and_retries(spark):
@@ -187,7 +194,7 @@ def test_clickhouse_sink_batches_and_retries(spark):
         insert_chunk=2,
     )
     rows = [{"remote_addr": f"1.1.1.{i}", "status": 200 + i, "extra": "x"} for i in range(5)]
-    sink.insert_partition(iter(rows))
+    sink.insert_partition(iter([pa.RecordBatch.from_pylist(rows)]))
     assert len(client.inserts) == 3  # chunks of 2,2,1
     table, first_chunk, cols = client.inserts[0]
     assert table == "db.access_log" and cols == ["remote_addr", "status"]
@@ -201,7 +208,7 @@ def test_clickhouse_sink_gives_up_after_retries():
         backoff_seconds=0.0, max_retries=2,
     )
     with pytest.raises(RuntimeError):
-        sink.insert_partition(iter([{"a": 1}]))
+        sink.insert_partition(iter([pa.RecordBatch.from_pylist([{"a": 1}])]))
 
 
 class FileBackedClient:
@@ -217,7 +224,7 @@ class FileBackedClient:
 
         path = os.path.join(self.directory, f"{uuid.uuid4().hex}.txt")
         with open(path, "w") as fh:
-            for row in rows:
+            for row in _row_tuples(rows, column_names):
                 fh.write(f"{table}|{','.join(column_names)}|{row}\n")
 
 
