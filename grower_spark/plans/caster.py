@@ -8,7 +8,9 @@ exactly (SURVEY.md §1.3):
 2. Empty string casts to the type's **zero value**, never NULL
    (caster.go:183-291): 0 for numerics, "" for strings.
 3. Empty Date/DateTime becomes "now" (caster.go:293-296).  ``now`` is an
-   injectable expression here so tests and oracles stay deterministic.
+   injectable expression here so tests and oracles stay deterministic, or
+   the name of a column holding it (``LogPipeline`` passes one in per
+   micro-batch).
 4. A malformed non-empty value is an error -> the whole row is dropped
    (caster.go:187-189 et al; handler.go:32-35).  Here each cast produces a
    companion validity predicate; the pipeline routes rows failing any
@@ -134,8 +136,8 @@ def _fixed_string_plan(type_name: str, size: int) -> CastPlan:
     )
 
 
-def _datetime_plan(type_name: str, jdk_pattern: str, now: Optional[Column],
-                   as_date: bool) -> CastPlan:
+def _datetime_plan(type_name: str, jdk_pattern: str,
+                   now: "Column | str | None", as_date: bool) -> CastPlan:
     dt: T.DataType = T.DateType() if as_date else T.TimestampType()
 
     def parsed(col: Column) -> Column:
@@ -143,10 +145,17 @@ def _datetime_plan(type_name: str, jdk_pattern: str, now: Optional[Column],
         return ts.cast(T.DateType()) if as_date else ts
 
     def value(col: Column) -> Column:
-        # resolve the default lazily: F.current_timestamp() needs an active
-        # SparkContext, and plan *construction* (e.g. `cli ddl`) must work
-        # without one
-        now_col = now if now is not None else F.current_timestamp()
+        # resolve the default and a column name lazily: building a Column
+        # needs an active SparkContext, and plan *construction* (e.g. `cli
+        # ddl`) must work without one.  A named column may hold a timestamp
+        # or its string form; the cast to timestamp comes first, so a Date
+        # is taken in the session time zone either way.
+        if now is None:
+            now_col = F.current_timestamp()
+        elif isinstance(now, str):
+            now_col = F.col(now).cast(T.TimestampType())
+        else:
+            now_col = now
         return F.when(col == "", now_col.cast(dt)).otherwise(parsed(col))
 
     def valid(col: Column) -> Column:
@@ -173,12 +182,12 @@ def parse_fixed_string_size(type_name: str) -> Optional[int]:
 
 
 def build_cast(type_name: str, *, local_time_format: str = "",
-               now: Optional[Column] = None) -> CastPlan:
+               now: "Column | str | None" = None) -> CastPlan:
     """Build the cast plan for an explicit ClickHouse type name.
 
     ``now`` is the fallback expression for empty Date/DateTime values
     (default ``current_timestamp()``, resolved lazily; inject a literal for
-    determinism).
+    determinism), or the name of the column that holds it.
     """
     if type_name in UNSIGNED:
         dt, upper = UNSIGNED[type_name]
@@ -204,7 +213,7 @@ def build_cast(type_name: str, *, local_time_format: str = "",
 def build_field_cast(field: str, *, local_time_format: str,
                      custom_casts: Optional[dict[str, str]] = None,
                      custom_casts_enable: bool = False,
-                     now: Optional[Column] = None) -> CastPlan:
+                     now: "Column | str | None" = None) -> CastPlan:
     """Resolve the cast for an nginx variable: custom cast if enabled and
     declared (caster.go:76-113), else built-in nginx typing (caster.go:118-140),
     else String passthrough.

@@ -11,18 +11,24 @@ line column, so Catalyst fuses parse+project+cast into a single
 WholeStageCodegen stage; there is nothing to hand-schedule.
 
 Extraction strategy (scale note): a naive port does one ``regexp_extract``
-per column = N regex executions per line.  The default here is the
-single-pass form — ``regexp_replace(line, pattern + '.*$', '$1\\x01$2...')``
-then ``split`` — one regex execution + one split per line regardless of
-column count.  Match detection falls out for free: a non-matching line is
-returned unchanged by regexp_replace and therefore splits into != n_groups
-parts (input lines containing the \\x01 separator are routed to dead-letter;
-never present in well-formed logs).  ``extract_mode="per_column"`` keeps the
-naive form for comparison.
+per column = N regex executions per line.  Here it is the single-pass form
+— ``regexp_replace(line, pattern + '.*$', '$1\\x01$2...')`` then ``split``
+— one regex execution + one split per line regardless of column count.
+Match detection falls out for free: a non-matching line is returned
+unchanged by regexp_replace and therefore splits into != n_groups parts
+(input lines containing the \\x01 separator are routed to dead-letter;
+never present in well-formed logs).
+
+The three stage ``select`` lists are built once per pipeline and line
+column and reused for every DataFrame parsed, so a streaming consumer
+that parses each micro-batch pays no per-batch expression building.  The
+fallback time for empty Date/DateTime values enters the scrub stage as
+the ``__now`` column (see ``parse_detailed``).
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -36,6 +42,8 @@ from grower_spark.plans.template import GROUP_SEP, LogFormat
 _PARTS = "__parts"
 _MATCHED = "__matched"
 _ND = "__nd"
+_NOW = "__now"
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 
 # Pushdown barrier: ``PushPredicateThroughNonJoin`` pushes a filter through a
 # Project whenever all *project fields* are deterministic (the condition's
@@ -63,9 +71,10 @@ class LogPipeline:
 
     config: PipelineConfig
     now: Optional[Column] = None  # deterministic override for empty-time fallback
-    extract_mode: str = "single_pass"  # or "per_column"
     log_format: LogFormat = field(init=False)
     casts: dict[str, CastPlan] = field(init=False)
+    # line column -> the three stage select lists, built on first use
+    _stages: dict = field(init=False, default_factory=dict, repr=False)
 
     def __post_init__(self) -> None:
         self.log_format = LogFormat.compile(self.config.nginx.log_format)
@@ -77,12 +86,12 @@ class LogPipeline:
                 local_time_format=ng.log_time_format,
                 custom_casts=ng.log_custom_casts,
                 custom_casts_enable=ng.log_custom_casts_enable,
-                now=self.now,
+                now=_NOW,
             )
 
     # -- raw field extraction -------------------------------------------------
 
-    def _scrubbed_fields(self, df: DataFrame, line: Column) -> DataFrame:
+    def _scrub_stages(self, line: Column) -> tuple[list[Column], list[Column]]:
         """Stage 1+2: extract raw groups, scrub hyphens, materialize one
         string attribute per *used* variable plus ``_matched``.
 
@@ -93,58 +102,43 @@ class LogPipeline:
         (observed blowup otherwise).
         """
         if self.config.nginx.log_type == "json":
-            return self._scrubbed_fields_json(df, line)
+            return self._scrub_stages_json(line)
         lf = self.log_format
         used_vars = [
             v for v in dict.fromkeys(self.config.scheme.columns.values())
             if v in lf.var_names
         ]
-        if self.extract_mode == "per_column":
-            matched = line.rlike(lf.pattern)
-            fields = {
-                var: F.regexp_extract(line, lf.pattern, lf.group_index(var))
-                for var in used_vars
-            }
-        else:
-            replaced = F.regexp_replace(line, lf.full_line_pattern(), lf.replacement())
-            stage1 = df.select(
-                line.alias("_raw"),
-                F.split(replaced, GROUP_SEP, -1).alias(_PARTS),
-            )
-            parts = F.col(_PARTS)
-            matched = (F.size(parts) == lf.n_groups) & (
-                ~F.col("_raw").contains(GROUP_SEP)
-            )
-            if lf.n_groups == 1:
-                # A non-matching line passes through regexp_replace
-                # unchanged and splits into exactly one part — for a
-                # single-group format that is indistinguishable from a
-                # match by part count alone, so the whole raw line would
-                # be silently accepted as the field value.  Re-check with
-                # rlike here only: for n_groups > 1 the count test is
-                # sufficient and avoids a second regex execution per line.
-                matched = matched & F.col("_raw").rlike(lf.full_line_pattern())
-            return stage1.select(
-                "_raw",
-                F.spark_partition_id().alias(_ND),
-                matched.alias(_MATCHED),
-                # F.get (not getItem): non-matching lines split into fewer
-                # parts and ANSI mode makes out-of-bounds getItem an error;
-                # get returns NULL, and `matched` already forces the row
-                # invalid, so NULL never reaches the output.
-                *[
-                    scrub_hyphen(F.get(parts, lf.group_index(var) - 1)).alias(f"__f_{var}")
-                    for var in used_vars
-                ],
-            )
-        return df.select(
-            line.alias("_raw"),
+        replaced = F.regexp_replace(line, lf.full_line_pattern(), lf.replacement())
+        stage1 = [line.alias("_raw"), F.split(replaced, GROUP_SEP, -1).alias(_PARTS)]
+        parts = F.col(_PARTS)
+        matched = (F.size(parts) == lf.n_groups) & (
+            ~F.col("_raw").contains(GROUP_SEP)
+        )
+        if lf.n_groups == 1:
+            # A non-matching line passes through regexp_replace
+            # unchanged and splits into exactly one part — for a
+            # single-group format that is indistinguishable from a
+            # match by part count alone, so the whole raw line would
+            # be silently accepted as the field value.  Re-check with
+            # rlike here only: for n_groups > 1 the count test is
+            # sufficient and avoids a second regex execution per line.
+            matched = matched & F.col("_raw").rlike(lf.full_line_pattern())
+        stage2 = [
+            F.col("_raw"),
             F.spark_partition_id().alias(_ND),
             matched.alias(_MATCHED),
-            *[scrub_hyphen(fields[var]).alias(f"__f_{var}") for var in used_vars],
-        )
+            # F.get (not getItem): non-matching lines split into fewer
+            # parts and ANSI mode makes out-of-bounds getItem an error;
+            # get returns NULL, and `matched` already forces the row
+            # invalid, so NULL never reaches the output.
+            *[
+                scrub_hyphen(F.get(parts, lf.group_index(var) - 1)).alias(f"__f_{var}")
+                for var in used_vars
+            ],
+        ]
+        return stage1, stage2
 
-    def _scrubbed_fields_json(self, df: DataFrame, line: Column) -> DataFrame:
+    def _scrub_stages_json(self, line: Column) -> tuple[list[Column], list[Column]]:
         """JSON log lines (``log_type: json``): the reference declared but
         never implemented this (template.go:39-41 returns nil; SURVEY.md §2.2
         P3) — here it's ``from_json`` into a flat string map (the shape
@@ -156,33 +150,26 @@ class LogPipeline:
         """
         used_vars = list(dict.fromkeys(self.config.scheme.columns.values()))
         parsed = F.from_json(line, "map<string,string>")
-        stage1 = df.select(line.alias("_raw"), parsed.alias(_PARTS))
+        stage1 = [line.alias("_raw"), parsed.alias(_PARTS)]
         obj = F.col(_PARTS)
         matched = obj.isNotNull()
         present = [F.when(matched, obj.getItem(v).isNotNull()) for v in used_vars]
         all_present = present[0] if present else F.lit(True)
         for p in present[1:]:
             all_present = all_present & p
-        return stage1.select(
-            "_raw",
+        stage2 = [
+            F.col("_raw"),
             F.spark_partition_id().alias(_ND),
             (matched & F.coalesce(all_present, F.lit(False))).alias(_MATCHED),
             *[
                 scrub_hyphen(F.coalesce(obj.getItem(v), F.lit(""))).alias(f"__f_{v}")
                 for v in used_vars
             ],
-        )
+        ]
+        return stage1, stage2
 
-    # -- public API -----------------------------------------------------------
-
-    def parse_detailed(self, df: DataFrame, line_col: str = "value") -> DataFrame:
-        """Typed columns + ``_valid`` flag + original line (``_raw``).
-
-        Rows whose line doesn't match the format, references a missing
-        variable, or fails any cast have ``_valid = false`` (the reference
-        warns and drops such rows; handler.go:28-35).
-        """
-        staged = self._scrubbed_fields(df, F.col(line_col))
+    def _cast_stage(self) -> list[Column]:
+        """Stage 3: typed columns, ``_valid`` and ``_raw``."""
         matched = F.col(_MATCHED)
         if self.config.nginx.log_type == "json":
             available = set(self.config.scheme.columns.values())
@@ -204,9 +191,46 @@ class LogPipeline:
             valid = valid & plan.valid(raw)
         # coalesce: NULL validity (e.g. NULL field from a JSON miss) must
         # land in the dead-letter side, and `~NULL` is NULL, not true
-        return staged.select(
-            F.col("_raw"), F.coalesce(valid, F.lit(False)).alias("_valid"), *cols
-        )
+        return [F.col("_raw"), F.coalesce(valid, F.lit(False)).alias("_valid"), *cols]
+
+    def _now_column(self, batch_time_ms: Optional[int]) -> Column:
+        if batch_time_ms is None:
+            now = self.now if self.now is not None else F.current_timestamp()
+            return now.alias(_NOW)
+        # The batch's time as a *string* literal behind the partition-id
+        # barrier, cast to timestamp only in the cast stage: Janino inlines a
+        # timestamp literal into the generated source, so every batch would
+        # compile new classes, while a string literal is passed by
+        # reference.  Without the barrier the optimizer folds the cast into
+        # the literal again.
+        stamp = _EPOCH + _dt.timedelta(milliseconds=batch_time_ms)
+        return F.when(F.spark_partition_id() >= 0,
+                      F.lit(stamp.isoformat(timespec="milliseconds"))).alias(_NOW)
+
+    # -- public API -----------------------------------------------------------
+
+    def parse_detailed(self, df: DataFrame, line_col: str = "value",
+                       batch_time_ms: Optional[int] = None) -> DataFrame:
+        """Typed columns + ``_valid`` flag + original line (``_raw``).
+
+        Rows whose line doesn't match the format, references a missing
+        variable, or fails any cast have ``_valid = false`` (the reference
+        warns and drops such rows; handler.go:28-35).
+
+        Empty Date/DateTime values fall back to ``now``, or
+        ``current_timestamp()`` when it is unset.  ``batch_time_ms`` (epoch
+        milliseconds) replaces both: a streaming consumer passes its
+        micro-batch's time, and the generated code is then the same for
+        every batch.
+        """
+        stages = self._stages.get(line_col)
+        if stages is None:
+            stages = self._stages[line_col] = (
+                *self._scrub_stages(F.col(line_col)), self._cast_stage())
+        stage1, stage2, stage3 = stages
+        return (df.select(*stage1)
+                .select(*stage2, self._now_column(batch_time_ms))
+                .select(*stage3))
 
     def parse(self, df: DataFrame, line_col: str = "value") -> DataFrame:
         """Valid, typed rows only (the reference's surviving pipeline output)."""

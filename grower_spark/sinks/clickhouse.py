@@ -14,6 +14,13 @@ app-level retry per chunk.  Unlike the reference's in-memory buffer (data
 loss on crash, SURVEY.md §4.2), checkpointing + a replayable source
 upgrades delivery to at-least-once.
 
+Given a dead-letter destination, the sink takes the whole parse result
+of a batch (``LogPipeline.parse_detailed``: ``_valid``, ``_raw`` and the
+typed columns) and splits it in the same ``mapInArrow`` pass: each task
+inserts its valid rows, then writes its invalid lines as one dead-letter
+parquet part (``sinks.deadletter.DeadLetterPart``).  ``FileLogRunner``
+wires it that way, so one streaming query parses each line once.
+
 The client is injectable — anything with ``insert(table, rows,
 column_names)`` taking a pyarrow ``RecordBatch`` as ``rows`` works — and
 two real options ship:
@@ -37,11 +44,14 @@ import gzip as _gzip
 import time
 import urllib.parse
 import urllib.request
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Optional, Sequence
 
 import pyarrow as pa
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from grower_spark.sinks.deadletter import DeadLetterPart
 
 
 def _tsv_value(v) -> str:
@@ -210,7 +220,9 @@ class ClickHouseSink:
     Python.  ``client_factory`` is called once per partition task (the
     client is not serializable); each batch is sliced into chunks of at
     most ``insert_chunk`` rows, so one giant micro-batch cannot create one
-    giant INSERT, and a failed chunk is retried on its own.
+    giant INSERT, and a failed chunk is retried on its own.  With a
+    ``deadletter`` part, ``foreach_batch`` splits a parse result instead
+    (``split_partition``).
     """
 
     table: str
@@ -219,7 +231,6 @@ class ClickHouseSink:
     max_retries: int = 3
     backoff_seconds: float = 0.5
     insert_chunk: int = 10000
-    settings: dict = field(default_factory=lambda: {"max_execution_time": 30})
 
     def insert_partition(self, batches) -> None:
         """Insert one partition, given as an iterator of pyarrow
@@ -230,6 +241,21 @@ class ClickHouseSink:
             for lo in range(0, batch.num_rows, self.insert_chunk):
                 self._insert_with_retry(client,
                                         batch.slice(lo, self.insert_chunk))
+
+    def split_partition(self, batches, deadletter: DeadLetterPart) -> None:
+        """Split one partition of ``_valid``, ``_dead`` (the raw line where
+        invalid, else NULL) and the sink columns: ``insert_partition``
+        receives the valid rows, reduced to the sink columns, and the
+        partition's dead lines are then written as one dead-letter part."""
+        dead: list[pa.Array] = []
+
+        def valid_rows():
+            for batch in batches:
+                dead.append(batch.column("_dead").drop_null())
+                yield batch.filter(batch.column("_valid")).select(list(self.columns))
+
+        self.insert_partition(valid_rows())
+        deadletter.write(dead)
 
     def _insert_with_retry(self, client, rows: pa.RecordBatch) -> None:
         attempt = 0
@@ -243,20 +269,35 @@ class ClickHouseSink:
                     raise
                 time.sleep(self.backoff_seconds * (2 ** (attempt - 1)))
 
-    def foreach_batch(self) -> Callable[[DataFrame, int], None]:
+    def foreach_batch(self) -> Callable[..., None]:
         """The function to hand to ``writeStream.foreachBatch`` (also
-        callable directly with a batch DataFrame for batch mode)."""
+        callable directly with a batch DataFrame for batch mode).
+
+        Called as ``write(batch_df, batch_id, deadletter=part)``, it takes
+        ``batch_df`` to be a ``parse_detailed`` result and splits it into
+        inserted rows and dead-letter lines in one pass."""
         sink = self
 
         def insert(batches):
             sink.insert_partition(batches)
             return iter(())
 
-        def write(batch_df: DataFrame, batch_id: int = 0) -> None:
+        def write(batch_df: DataFrame, batch_id: int = 0,
+                  deadletter: Optional[DeadLetterPart] = None) -> None:
             # mapInArrow hands each partition over as Arrow record batches;
             # the function yields nothing, and collect() runs the job
-            batch_df.select(*sink.columns).mapInArrow(
-                insert, "inserted long").collect()
+            if deadletter is None:
+                batch_df.select(*sink.columns).mapInArrow(
+                    insert, "inserted long").collect()
+                return
+
+            def split(batches):
+                sink.split_partition(batches, deadletter)
+                return iter(())
+
+            valid = F.col("_valid")
+            batch_df.select(valid, F.when(~valid, F.col("_raw")).alias("_dead"),
+                            *sink.columns).mapInArrow(split, "inserted long").collect()
 
         return write
 

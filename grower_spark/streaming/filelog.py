@@ -7,15 +7,32 @@ parse/cast workers -> buffered ClickHouse insert; SIGINT/SIGTERM -> drain.
 Spark lifecycle here: file stream on the rotation directory
 (``trigger(processingTime=scrape_interval)`` ≈ the ticker, S3) -> the
 config-compiled LogPipeline (one codegen stage ≈ the worker pool, C1) ->
-sink (foreachBatch ClickHouse, or parquet files) + dead-letter stream;
-checkpointing makes delivery at-least-once where the reference's memory
-buffer was at-most-once (SURVEY.md §4.2); ``stop()`` on signal ≈ the
-dropper chain (C3/C5).  An optional liveness HTTP endpoint mirrors C4.
+sink.  Checkpointing makes delivery at-least-once where the reference's
+memory buffer was at-most-once (SURVEY.md §4.2); ``stop()`` on signal ≈
+the dropper chain (C3/C5).  An optional liveness HTTP endpoint mirrors C4.
+
+Two sink modes:
+
+- ``foreach_batch`` (e.g. ClickHouse): ONE streaming query over the raw
+  lines, as the reference parses each line once on its way to one bulk
+  insert (handler.go:20-39).  Its ``foreachBatch`` parses the batch once,
+  and the sink splits the result in one pass: valid rows are inserted and
+  invalid lines become dead-letter parquet parts.  The batch's time
+  (``batchTimestampMs`` from the offset log) is the fallback for empty
+  Date/DateTime values and the dead lines' ``seen_at``; it enters the
+  plan so that the generated code, once compiled, serves every batch.
+- parquet files (no ``foreach_batch``): the typed rows go to a file sink
+  and, with ``deadletter_path``, the invalid lines to a second query's
+  file sink.  Each query parses every line and recompiles its parse code
+  every batch (``current_timestamp()`` is a new literal in each); the two
+  file sinks keep their own exactly-once metadata logs.
 """
 
 from __future__ import annotations
 
 import http.server
+import inspect
+import json
 import logging
 import os
 import signal
@@ -23,19 +40,43 @@ import threading
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from grower_spark.config import PipelineConfig
 from grower_spark.plans.pipeline import LogPipeline
-from grower_spark.sinks.deadletter import deadletter_writer
+from grower_spark.sinks.deadletter import DeadLetterPart, deadletter_writer
 from grower_spark.sinks.files import file_stream_writer
 from grower_spark.sources.file import stream_lines
 
 log = logging.getLogger(__name__)
 
 
+def batch_timestamp_ms(checkpoint: str, batch_id: int) -> int:
+    """``batchTimestampMs`` of micro-batch ``batch_id``: the value
+    ``current_timestamp()`` has in that batch.  The offset log records it
+    before the batch runs, and a replay of the batch reads it back.  The
+    checkpoint is read as a local directory."""
+    with open(os.path.join(checkpoint, "offsets", str(batch_id))) as fh:
+        fh.readline()  # log version
+        return int(json.loads(fh.readline())["batchTimestampMs"])
+
+
 @dataclass
 class FileLogRunner:
+    """The ingest topology: a line stream (the rotation directory, or
+    ``lines_df``) parsed by the config's ``LogPipeline`` into a sink.
+
+    With ``foreach_batch`` it runs one query, ``filelog-main``, over the
+    raw lines.  Each batch is parsed once and handed over whole; with
+    ``deadletter_path`` the callable is called as ``foreach_batch(parsed,
+    batch_id, deadletter=DeadLetterPart(...))`` and writes both sides
+    (``ClickHouseSink.foreach_batch()`` does), without it as
+    ``foreach_batch(valid_rows, batch_id)``.  Without ``foreach_batch`` it
+    writes parquet: ``filelog-main`` plus, with ``deadletter_path``, a
+    second query ``filelog-deadletter``.
+    """
+
     spark: SparkSession
     config: PipelineConfig
     logs_dir: str
@@ -62,29 +103,32 @@ class FileLogRunner:
             max_files_per_trigger=self.max_files_per_trigger,
         )
         pipeline = LogPipeline(self.config)
-        good, bad = pipeline.parse_with_deadletter(lines)
+        checkpoint = os.path.join(self.checkpoint_root, "main")
 
         if self.foreach_batch is not None:
-            writer = good.writeStream.foreachBatch(self.foreach_batch).option(
-                "checkpointLocation", os.path.join(self.checkpoint_root, "main")
-            )
+            writer = lines.writeStream.foreachBatch(
+                self._parse_batch(pipeline, checkpoint)
+            ).option("checkpointLocation", checkpoint)
             if self.available_now:
                 writer = writer.trigger(availableNow=True)
             else:
                 writer = writer.trigger(
                     processingTime=f"{self.scrape_interval_seconds} seconds"
                 )
-        else:
-            from grower_spark.sinks.files import pick_time_col
+            self.queries.append(writer.queryName("filelog-main").start())
+            return self
 
-            writer = file_stream_writer(
-                good,
-                self.output_path,
-                os.path.join(self.checkpoint_root, "main"),
-                time_col=pick_time_col(good),
-                trigger_seconds=None if self.available_now else self.scrape_interval_seconds,
-                available_now=self.available_now,
-            )
+        from grower_spark.sinks.files import pick_time_col
+
+        good, bad = pipeline.parse_with_deadletter(lines)
+        writer = file_stream_writer(
+            good,
+            self.output_path,
+            checkpoint,
+            time_col=pick_time_col(good),
+            trigger_seconds=None if self.available_now else self.scrape_interval_seconds,
+            available_now=self.available_now,
+        )
         self.queries.append(writer.queryName("filelog-main").start())
 
         if self.deadletter_path:
@@ -99,6 +143,40 @@ class FileLogRunner:
                 dl = dl.trigger(processingTime=f"{self.scrape_interval_seconds} seconds")
             self.queries.append(dl.queryName("filelog-deadletter").start())
         return self
+
+    def _parse_batch(self, pipeline: LogPipeline, checkpoint: str) -> Callable:
+        """The ``foreachBatch`` function of the one-query mode."""
+        sink = self.foreach_batch
+        dead = self.deadletter_path and os.path.abspath(self.deadletter_path)
+        if dead:
+            if os.path.exists(os.path.join(dead, "_spark_metadata")):
+                # Spark reads such a directory through the file sink's log
+                # alone, so parts written here would never be read
+                raise ValueError(
+                    f"dead-letter directory {dead} was written by a streaming "
+                    "file sink (it holds _spark_metadata); readers would not "
+                    "see new dead-letter parts there: use a new directory")
+            if "deadletter" not in inspect.signature(sink).parameters:
+                raise TypeError(
+                    "with deadletter_path, foreach_batch must accept a "
+                    "deadletter= keyword (as ClickHouseSink.foreach_batch() "
+                    "does) and write the invalid lines it is given")
+        jvm = self.spark._jvm
+        zone = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+            self.spark.conf.get("spark.sql.session.timeZone"))
+
+        def run(batch_df: DataFrame, batch_id: int) -> None:
+            now_ms = batch_timestamp_ms(checkpoint, batch_id)
+            parsed = pipeline.parse_detailed(batch_df, batch_time_ms=now_ms)
+            if not dead:
+                sink(parsed.where(F.col("_valid")).drop("_raw", "_valid"), batch_id)
+                return
+            seen_date = jvm.java.time.Instant.ofEpochMilli(now_ms).atZone(
+                zone).toLocalDate().toString()
+            sink(parsed, batch_id,
+                 deadletter=DeadLetterPart(dead, batch_id, now_ms, seen_date))
+
+        return run
 
     @classmethod
     def for_queries(cls, queries: list) -> "FileLogRunner":

@@ -738,3 +738,138 @@ def test_midinsert_exception_closes_connection_and_retry_reconnects():
         c.close()
     finally:
         srv.close()
+
+
+# -- the ClickHouse filelog topology: one query, parse once ----------------
+
+FILELOG_CONFIG = {
+    "nginx": {
+        "log_format": '$remote_addr - $remote_user [$time_local] "$request" $status',
+        "log_time_format": "02/Jan/2006:15:04:05 -0700",
+    },
+    "scheme": {
+        "logs_table": "logs.access",
+        "columns": {"remote_addr": "remote_addr", "time_local": "time_local",
+                    "request": "request", "status": "status"},
+    },
+}
+FILELOG_TYPES = {"remote_addr": "String", "time_local": "DateTime",
+                 "request": "String", "status": "UInt16"}
+FILELOG_LINE = '1.2.3.4 - bob [21/Jul/2022:00:30:43 +0300] "GET / HTTP/1.1" {}'
+FILELOG_EPOCH = int(datetime.datetime(
+    2022, 7, 20, 21, 30, 43, tzinfo=datetime.timezone.utc).timestamp())
+
+
+def _write_filelogs(logs, n_files: int) -> None:
+    """Per file k: a good line (status 200+k), a bad line, and a good line
+    whose time is ``-`` (status 300+k)."""
+    logs.mkdir()
+    for k in range(n_files):
+        (logs / f"access-{k}.growerlog").write_text("\n".join([
+            FILELOG_LINE.format(200 + k),
+            f"not a log line {k}",
+            FILELOG_LINE.replace("21/Jul/2022:00:30:43 +0300", "-").format(300 + k),
+        ]) + "\n")
+
+
+def _run_filelog(spark, tmp_path, port: int):
+    from grower_spark.config import PipelineConfig
+    from grower_spark.streaming.filelog import FileLogRunner
+
+    runner = FileLogRunner(
+        spark, PipelineConfig.from_dict(FILELOG_CONFIG),
+        logs_dir=str(tmp_path / "logs"), output_path="",
+        checkpoint_root=str(tmp_path / "ckpt"),
+        deadletter_path=str(tmp_path / "dead"),
+        foreach_batch=ClickHouseSink(
+            table="logs.access", columns=list(FILELOG_TYPES),
+            client_factory=lambda: NativeClickHouseClient("127.0.0.1", port),
+        ).foreach_batch(),
+        available_now=True,
+    ).start()
+    runner.await_termination(timeout=120)
+    return runner
+
+
+def _file_batches(tmp_path) -> dict:
+    """Log file number -> (batch id, the batch's batchTimestampMs), from
+    the query's checkpoint."""
+    import json
+    import os
+
+    from grower_spark.streaming.filelog import batch_timestamp_ms
+
+    ckpt = str(tmp_path / "ckpt" / "main")
+    out = {}
+    src = os.path.join(ckpt, "sources", "0")
+    for name in os.listdir(src):
+        if name.isdigit():
+            with open(os.path.join(src, name)) as fh:
+                for line in fh.read().splitlines()[1:]:
+                    entry = json.loads(line)
+                    k = int(entry["path"].rsplit("-", 1)[1].split(".")[0])
+                    batch = int(entry["batchId"])
+                    out[k] = (batch, batch_timestamp_ms(ckpt, batch))
+    return out
+
+
+def _landed(srv) -> list:
+    return sorted(t for b in srv.inserts for t in zip(*[v for _, _, v in b]))
+
+
+def _dead_lines(spark, tmp_path) -> list:
+    return sorted(
+        (r["line"], r["ms"]) for r in spark.read.parquet(str(tmp_path / "dead"))
+        .selectExpr("line", "unix_millis(seen_at) AS ms").collect())
+
+
+def test_filelog_clickhouse_one_query_e2e(spark, tmp_path):
+    """FileLogRunner with the ClickHouse sink runs ONE query: every good row
+    lands once in the native server, the dead-letter directory holds exactly
+    the bad lines (seen at their batch's time), and an empty time_local
+    lands as the batch's ``batchTimestampMs`` (DateTime: whole seconds)."""
+    _write_filelogs(tmp_path / "logs", 3)
+    srv = FakeNativeServer(table_types=FILELOG_TYPES)
+    try:
+        runner = _run_filelog(spark, tmp_path, srv.port)
+        landed = _landed(srv)
+    finally:
+        srv.close()
+    assert len(runner.queries) == 1
+    batches = _file_batches(tmp_path)
+    assert sorted(b for b, _ in batches.values()) == [0, 1, 2]
+    want = []
+    for k, (_, ms) in batches.items():
+        want.append(("1.2.3.4", FILELOG_EPOCH, "GET / HTTP/1.1", 200 + k))
+        want.append(("1.2.3.4", ms // 1000, "GET / HTTP/1.1", 300 + k))
+    assert landed == sorted(want)
+    assert _dead_lines(spark, tmp_path) == sorted(
+        (f"not a log line {k}", ms) for k, (_, ms) in batches.items())
+
+
+def test_filelog_clickhouse_replayed_batch(spark, tmp_path):
+    """A batch replayed after a crash (its commit record deleted) writes
+    its dead-letter part again in place, so each dead line is there once,
+    and its rows, delivered again (at-least-once), carry the same fallback
+    time as the first delivery."""
+    import os
+
+    _write_filelogs(tmp_path / "logs", 3)
+    srv = FakeNativeServer(table_types=FILELOG_TYPES)
+    try:
+        _run_filelog(spark, tmp_path, srv.port)
+        first = _landed(srv)
+        dead_first = _dead_lines(spark, tmp_path)
+        commits = tmp_path / "ckpt" / "main" / "commits"
+        os.remove(commits / "2")
+        os.remove(commits / ".2.crc")  # the checksum file would block the rewrite
+        _run_filelog(spark, tmp_path, srv.port)
+        both = _landed(srv)
+    finally:
+        srv.close()
+    replayed = next(k for k, (b, _) in _file_batches(tmp_path).items() if b == 2)
+    again = [r for r in first if r[3] in (200 + replayed, 300 + replayed)]
+    assert len(again) == 2
+    assert both == sorted(first + again)
+    assert _dead_lines(spark, tmp_path) == dead_first
+    assert len(dead_first) == 3

@@ -97,9 +97,8 @@ def extended_config() -> PipelineConfig:
     )
 
 
-@pytest.mark.parametrize("mode", ["single_pass", "per_column"])
-def test_case_one_golden(spark, mode):
-    pipeline = LogPipeline(extended_config(), extract_mode=mode)
+def test_case_one_golden(spark):
+    pipeline = LogPipeline(extended_config())
     df = spark.createDataFrame([(SAMPLE_LINE,)], ["value"])
     rows = pipeline.parse(df).collect()
     assert len(rows) == 1

@@ -244,6 +244,75 @@ def test_clickhouse_foreach_batch_roundtrip(spark, tmp_path):
     assert lines == ["db.t|status|(200,)", "db.t|status|(404,)"]
 
 
+def _write_logs(logs, n_files):
+    """One good line per file (status 200 + file number), one bad line and
+    one line whose time is ``-``."""
+    logs.mkdir()
+    for k in range(n_files):
+        (logs / f"access-{k}.growerlog").write_text("\n".join([
+            LINE.replace(" 200", f" {200 + k}"),
+            f"{BAD} {k}",
+            LINE.replace("21/Jul/2022:00:30:43 +0300", "-"),
+        ]) + "\n")
+
+
+def test_clickhouse_topology_compiles_its_code_once(spark, tmp_path):
+    """The ClickHouse topology runs one query whose generated code is the
+    same in every micro-batch: after the first file, Spark's codegen
+    compile count stays flat (the batch's time enters the plan as a string
+    behind a barrier, not as an inlined timestamp literal)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    out = tmp_path / "inserts"
+    out.mkdir()
+    out_str = str(out)
+    write = ClickHouseSink(
+        table="db.t", columns=["remote_addr", "time_local", "status"],
+        client_factory=lambda: FileBackedClient(out_str),
+    ).foreach_batch()
+    compiles = []
+
+    def counted(batch_df, batch_id, deadletter=None):
+        write(batch_df, batch_id, deadletter=deadletter)
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount())
+
+    _write_logs(tmp_path / "logs", 4)
+    runner = FileLogRunner(
+        spark, PipelineConfig.from_dict(CONFIG),
+        logs_dir=str(tmp_path / "logs"), output_path="",
+        checkpoint_root=str(tmp_path / "ckpt"),
+        deadletter_path=str(tmp_path / "dl"),
+        foreach_batch=counted, available_now=True,
+    ).start()
+    runner.await_termination(timeout=120)
+    assert len(runner.queries) == 1
+    assert len(compiles) == 4
+    assert compiles[1:] == [compiles[0]] * 3
+    landed = [line for f in out.iterdir() for line in f.read_text().splitlines()]
+    assert len(landed) == 8
+
+
+def test_clickhouse_topology_refuses_file_sink_deadletter_dir(spark, tmp_path):
+    """A dead-letter directory a streaming file sink wrote is read through
+    its ``_spark_metadata`` log only, so new parts there would be invisible:
+    ``start()`` refuses it before any query starts."""
+    dl = tmp_path / "dl"
+    (dl / "_spark_metadata").mkdir(parents=True)
+    (tmp_path / "logs").mkdir()
+    active = len(spark.streams.active)
+    runner = FileLogRunner(
+        spark, PipelineConfig.from_dict(CONFIG),
+        logs_dir=str(tmp_path / "logs"), output_path="",
+        checkpoint_root=str(tmp_path / "ckpt"), deadletter_path=str(dl),
+        foreach_batch=ClickHouseSink(
+            table="db.t", columns=["status"],
+            client_factory=lambda: FlakyClient()).foreach_batch(),
+        available_now=True,
+    )
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        runner.start()
+    assert runner.queries == [] and len(spark.streams.active) == active
+
+
 def test_clickhouse_ddl():
     ddl = clickhouse_ddl(
         "only_tests.access_log",
