@@ -102,7 +102,8 @@ def build_parser() -> argparse.ArgumentParser:
     kl.add_argument("--poll-interval", type=float, default=1.0,
                     help="--follow: seconds between broker polls")
     kl.add_argument("--scrape-interval", type=int, default=5,
-                    help="--follow: streaming trigger seconds")
+                    help="streaming trigger seconds (--follow and the "
+                         "connector path)")
     kl.add_argument("--live-addr-port", type=int, default=0,
                     help="--follow: liveness HTTP port + /metrics (superset: "
                          "the reference kafkalog server has no liveness "
@@ -765,11 +766,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "kafkalog":
-        from grower_spark.plans.pipeline import LogPipeline
-        from grower_spark.sinks.deadletter import write_deadletter_batch
-        from grower_spark.sinks.files import pick_time_col, write_batch_files
-
-        pipeline = LogPipeline(cfg)
         if not args.wire_spool:
             # fail fast: these flags only exist on the wire-spool path —
             # silently falling through to the connector topology would run
@@ -900,39 +896,37 @@ def main(argv: list[str] | None = None) -> int:
                 saved = ckpt.load()
                 saved.update(offsets)
                 ckpt.save(saved)
+            from grower_spark.plans.pipeline import LogPipeline
+            from grower_spark.sinks.deadletter import write_deadletter_batch
+            from grower_spark.sinks.files import pick_time_col, write_batch_files
+
             spark.dataSource.register(FileBufDataSource)
             lines = spark.read.format("filebuf").load(args.wire_spool)
-            good, bad = pipeline.parse_with_deadletter(lines)
+            good, bad = LogPipeline(cfg).parse_with_deadletter(lines)
             write_batch_files(good, args.output, time_col=pick_time_col(good))
             if args.dead_letter:
                 write_deadletter_batch(bad, args.dead_letter)
             print(f"wrote {args.output}; {offsets_note}")
             return 0
         # connector path: requires spark-sql-kafka on the classpath
-        from grower_spark.sinks.deadletter import deadletter_writer
         from grower_spark.sources.kafka import kafka_line_stream
+        from grower_spark.streaming.filelog import FileLogRunner
 
         for entry in args.brokers.split(","):
             _parse_broker(entry)  # fail fast with a usable message
-        stream = kafka_line_stream(spark, brokers=args.brokers, topic=args.topic)
-        good, bad = pipeline.parse_with_deadletter(stream)
-        checkpoint = args.checkpoint or args.output + "/_checkpoint"
-        dlq = None
-        if args.dead_letter:
-            dlq = deadletter_writer(
-                bad, args.dead_letter, checkpoint + "_dlq", source="kafkalog"
-            ).start()
-        writer = (
-            good.writeStream.format("parquet")
-            .option("path", args.output)
-            .option("checkpointLocation", checkpoint)
-        )
-        query = writer.start()
-        try:
-            query.awaitTermination()
-        finally:
-            if dlq is not None:
-                dlq.stop()
+        runner = FileLogRunner(
+            spark,
+            cfg,
+            logs_dir="",  # unused: lines_df overrides the text source
+            output_path=args.output,
+            checkpoint_root=args.checkpoint or args.output + "/_checkpoint",
+            scrape_interval_seconds=args.scrape_interval,
+            deadletter_path=args.dead_letter,
+            lines_df=kafka_line_stream(spark, brokers=args.brokers,
+                                       topic=args.topic),
+        ).start()
+        runner.install_signal_handlers()
+        runner.await_termination()
         return 0
 
     if args.command == "syslog":

@@ -1,15 +1,13 @@
 from grower_spark.sinks.clickhouse import ClickHouseSink, IdempotentForeachBatch, clickhouse_ddl
-from grower_spark.sinks.files import write_batch_files, file_stream_writer
+from grower_spark.sinks.files import ParquetSink, write_batch_files
 from grower_spark.sinks.kafka import kafka_writer_options, frame_for_kafka
-from grower_spark.sinks.deadletter import deadletter_writer
 
 __all__ = [
     "ClickHouseSink",
     "IdempotentForeachBatch",
     "clickhouse_ddl",
+    "ParquetSink",
     "write_batch_files",
-    "file_stream_writer",
     "kafka_writer_options",
     "frame_for_kafka",
-    "deadletter_writer",
 ]

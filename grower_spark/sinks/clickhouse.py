@@ -48,10 +48,9 @@ from dataclasses import dataclass
 from typing import Callable, Optional, Sequence
 
 import pyarrow as pa
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from grower_spark.sinks.deadletter import DeadLetterPart
+from grower_spark.sinks.deadletter import DeadLetterPart, split_columns, split_valid
 
 
 def _tsv_value(v) -> str:
@@ -222,7 +221,7 @@ class ClickHouseSink:
     most ``insert_chunk`` rows, so one giant micro-batch cannot create one
     giant INSERT, and a failed chunk is retried on its own.  With a
     ``deadletter`` part, ``foreach_batch`` splits a parse result instead
-    (``split_partition``).
+    (``sinks.deadletter.split_valid``).
     """
 
     table: str
@@ -241,21 +240,6 @@ class ClickHouseSink:
             for lo in range(0, batch.num_rows, self.insert_chunk):
                 self._insert_with_retry(client,
                                         batch.slice(lo, self.insert_chunk))
-
-    def split_partition(self, batches, deadletter: DeadLetterPart) -> None:
-        """Split one partition of ``_valid``, ``_dead`` (the raw line where
-        invalid, else NULL) and the sink columns: ``insert_partition``
-        receives the valid rows, reduced to the sink columns, and the
-        partition's dead lines are then written as one dead-letter part."""
-        dead: list[pa.Array] = []
-
-        def valid_rows():
-            for batch in batches:
-                dead.append(batch.column("_dead").drop_null())
-                yield batch.filter(batch.column("_valid")).select(list(self.columns))
-
-        self.insert_partition(valid_rows())
-        deadletter.write(dead)
 
     def _insert_with_retry(self, client, rows: pa.RecordBatch) -> None:
         attempt = 0
@@ -292,12 +276,12 @@ class ClickHouseSink:
                 return
 
             def split(batches):
-                sink.split_partition(batches, deadletter)
+                split_valid(batches, sink.columns, sink.insert_partition,
+                            deadletter)
                 return iter(())
 
-            valid = F.col("_valid")
-            batch_df.select(valid, F.when(~valid, F.col("_raw")).alias("_dead"),
-                            *sink.columns).mapInArrow(split, "inserted long").collect()
+            batch_df.select(*split_columns(sink.columns)).mapInArrow(
+                split, "inserted long").collect()
 
         return write
 

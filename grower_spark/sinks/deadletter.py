@@ -6,9 +6,10 @@ context is the superset that degrades to drop (SURVEY.md §1.3 item 4).
 
 Every writer here keeps one layout: ``line, source, seen_at``, partitioned
 by ``seen_date``, so ``spark.read.parquet(path)`` reads the directory
-whichever wrote it.  ``DeadLetterPart`` is the one a ``foreachBatch`` sink
-uses to write a batch's dead lines from the same tasks that insert its
-valid rows.
+whichever wrote it.  ``write_deadletter_batch`` writes a batch job's dead
+lines.  A ``foreachBatch`` sink splits each partition of a parse result
+with ``split_valid`` and writes the partition's dead lines as one
+``DeadLetterPart``, from the same task that writes its valid rows.
 """
 
 from __future__ import annotations
@@ -16,44 +17,65 @@ from __future__ import annotations
 import os
 import uuid
 from dataclasses import dataclass
-from typing import Sequence
+from typing import Callable, Iterator, Sequence
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark import TaskContext
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
-
-
-def with_deadletter_meta(bad: DataFrame, source: str = "filelog") -> DataFrame:
-    return bad.select(
-        F.col("line"),
-        F.lit(source).alias("source"),
-        F.current_timestamp().alias("seen_at"),
-        F.to_date(F.current_timestamp()).alias("seen_date"),
-    )
-
-
-def deadletter_writer(bad: DataFrame, path: str, checkpoint_dir: str,
-                      source: str = "filelog"):
-    """Streaming writer builder for the dead-letter parquet directory."""
-    return (
-        with_deadletter_meta(bad, source)
-        .writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("seen_date")
-        .outputMode("append")
-    )
 
 
 def write_deadletter_batch(bad: DataFrame, path: str, source: str = "filelog") -> None:
     (
-        with_deadletter_meta(bad, source)
+        bad.select(
+            F.col("line"),
+            F.lit(source).alias("source"),
+            F.current_timestamp().alias("seen_at"),
+            F.to_date(F.current_timestamp()).alias("seen_date"),
+        )
         .write.partitionBy("seen_date")
         .mode("append")
         .parquet(path)
     )
+
+
+def split_columns(columns: Sequence[str]) -> list[Column]:
+    """What ``split_valid`` reads, selected from a ``parse_detailed``
+    result: ``_valid``, ``_dead`` (the raw line where invalid, else NULL)
+    and ``columns``."""
+    valid = F.col("_valid")
+    return [valid, F.when(~valid, F.col("_raw")).alias("_dead"), *columns]
+
+
+def split_valid(batches: Iterator[pa.RecordBatch], columns: Sequence[str],
+                write_valid: Callable[[Iterator[pa.RecordBatch]], None],
+                deadletter: "DeadLetterPart") -> None:
+    """Split one partition of ``split_columns(columns)``: ``write_valid``
+    receives the valid rows, reduced to ``columns``, and the partition's
+    dead lines are then written as one dead-letter part."""
+    dead: list[pa.Array] = []
+
+    def valid_rows():
+        for batch in batches:
+            dead.append(batch.column("_dead").drop_null())
+            yield batch.filter(batch.column("_valid")).select(list(columns))
+
+    write_valid(valid_rows())
+    deadletter.write(dead)
+
+
+def write_part(table: pa.Table, directory: str, batch_id: int) -> None:
+    """Write ``table`` as ``<directory>/part-<batch_id>-<partition>.parquet``
+    from the running task: first under a hidden name, which Spark's reader
+    skips, then renamed into place.  A replayed batch therefore replaces
+    its files instead of adding copies, as long as it splits into the same
+    partitions.  ``directory`` is on the local file system."""
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{batch_id}-{TaskContext.get().partitionId()}.parquet"
+    tmp = os.path.join(directory, f".{name}.{uuid.uuid4().hex}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(directory, name))
 
 
 @dataclass(frozen=True)
@@ -61,14 +83,10 @@ class DeadLetterPart:
     """One micro-batch's dead-letter output, written from the tasks that
     process the batch.
 
-    ``write`` stores one task's dead lines as the parquet file
-    ``<path>/seen_date=<seen_date>/part-<batch_id>-<partition>.parquet``:
-    first under a hidden name, which Spark's reader skips, then renamed
-    into place.  A replayed batch therefore replaces its files instead of
-    adding copies, as long as it splits into the same partitions.
-    ``seen_at_ms`` is the batch's time (``current_timestamp()`` in that
-    batch), so a replay writes the same values.  ``path`` is a directory on
-    the local file system.
+    ``write`` stores one task's dead lines with ``write_part`` under
+    ``<path>/seen_date=<seen_date>/``.  ``seen_at_ms`` is the batch's time
+    (``current_timestamp()`` in that batch), so a replay writes the same
+    values.
     """
 
     path: str
@@ -88,9 +106,5 @@ class DeadLetterPart:
             "seen_at": pa.repeat(
                 pa.scalar(self.seen_at_ms * 1000, pa.timestamp("us", tz="UTC")), n),
         })
-        directory = os.path.join(self.path, f"seen_date={self.seen_date}")
-        os.makedirs(directory, exist_ok=True)
-        name = f"part-{self.batch_id}-{TaskContext.get().partitionId()}.parquet"
-        tmp = os.path.join(directory, f".{name}.{uuid.uuid4().hex}.tmp")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(directory, name))
+        write_part(table, os.path.join(self.path, f"seen_date={self.seen_date}"),
+                   self.batch_id)

@@ -4,17 +4,29 @@ reference's ClickHouse destination.
 The reference table (migrations/sample_test.sql:17-19) is monthly
 partitioned on a derived ``insert_date`` with ORDER BY (status,
 insert_date).  Parquet equivalents: a derived month partition column
-(partition pruning ≈ ClickHouse partition elimination) and
-``sortWithinPartitions`` (row-group clustering ≈ ORDER BY locality, which
-gives min/max-pruning inside files).
+(partition pruning ≈ ClickHouse partition elimination) and rows sorted
+within each file (row-group clustering ≈ ORDER BY locality, which gives
+min/max-pruning inside files).  ``write_batch_files`` writes a batch job's
+rows; ``ParquetSink`` is the streaming ingest's ``foreachBatch`` sink.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+import os
+from dataclasses import dataclass
+from typing import Callable, Iterator, Optional, Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
+
+from grower_spark.sinks.deadletter import (
+    DeadLetterPart,
+    split_columns,
+    split_valid,
+    write_part,
+)
 
 
 def pick_time_col(df: DataFrame) -> Optional[str]:
@@ -58,32 +70,85 @@ def write_batch_files(
     writer.format(fmt).mode("append").save(path)
 
 
-def file_stream_writer(
-    df: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    time_col: Optional[str] = "time_local",
-    fmt: str = "parquet",
-    trigger_seconds: Optional[int] = None,
-    available_now: bool = False,
-):
-    """Streaming writer builder (caller invokes ``.start()``)."""
-    out = with_insert_date(df, time_col)
-    writer = (
-        out.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if time_col is not None:
-        writer = writer.partitionBy("insert_month")
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer
+# the directory name Spark's partitioned writers give a NULL partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
+@dataclass(frozen=True)
+class ParquetSink:
+    """``foreachBatch`` writer of typed rows to the parquet directory
+    ``path``, in ``write_batch_files``' layout: ``insert_date`` and
+    ``insert_month`` derived from the first time column (``pick_time_col``),
+    partitioned by ``insert_month``, and sorted by ``(status,
+    insert_date)`` within each file.
+
+    ``foreach_batch`` runs one ``mapInArrow`` pass.  Each task sorts its
+    valid rows with pyarrow and writes them as
+    ``insert_month=<m>/part-<batch_id>-<partition>.parquet`` (just
+    ``part-<batch_id>-<partition>.parquet`` without a time column); with a
+    ``deadletter`` part it takes a ``parse_detailed`` result and writes the
+    task's invalid lines to that part too.  Files go through
+    ``sinks.deadletter.write_part``, so a replayed batch replaces the files
+    it wrote before and each row is read once.  Between a crash and its
+    replay a reader can see part of the crashed batch, as with ClickHouse
+    inserts; no commit log hides it.  Files are named by batch id, so
+    ``path`` belongs to one query checkpoint: a new checkpoint starts again
+    at batch 0 and would replace earlier parts.  ``path`` is a directory
+    on the local file system.
+    """
+
+    path: str
+
+    def write_partition(self, batches: Iterator[pa.RecordBatch],
+                        batch_id: int) -> None:
+        """Write one task's rows, sorted, one file per month."""
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        table = pa.Table.from_batches(batches)
+        order = [c for c in ("status", "insert_date") if c in table.column_names]
+        if order:
+            # Spark sorts NULLs first in ascending order
+            table = table.sort_by([(c, "ascending") for c in order],
+                                  null_placement="at_start")
+        if "insert_month" not in table.column_names:
+            write_part(table, self.path, batch_id)
+            return
+        months = table.column("insert_month")
+        for month in pc.unique(months).to_pylist():
+            rows = table.filter(pc.is_null(months) if month is None
+                                else pc.equal(months, month))
+            write_part(rows.drop_columns(["insert_month"]),
+                       os.path.join(self.path, f"insert_month={month or _NULL_PARTITION}"),
+                       batch_id)
+
+    def foreach_batch(self) -> Callable[..., None]:
+        """The function to hand to ``writeStream.foreachBatch``, with the
+        call shape of ``ClickHouseSink.foreach_batch()``:
+        ``write(batch_df, batch_id, deadletter=None)``."""
+        sink = self
+
+        def write(batch_df: DataFrame, batch_id: int = 0,
+                  deadletter: Optional[DeadLetterPart] = None) -> None:
+            columns = [c for c in batch_df.columns if c not in ("_valid", "_raw")]
+            time_col = pick_time_col(batch_df)
+            out = with_insert_date(batch_df, time_col)
+            if time_col is not None:
+                columns += ["insert_date", "insert_month"]
+
+            def run(batches):
+                if deadletter is None:
+                    sink.write_partition(batches, batch_id)
+                else:
+                    split_valid(batches, columns,
+                                lambda valid: sink.write_partition(valid, batch_id),
+                                deadletter)
+                return iter(())
+
+            selected = columns if deadletter is None else split_columns(columns)
+            out.select(*selected).mapInArrow(run, "written long").collect()
+
+        return write
 
 
 def _shard_checksum() -> Column:

@@ -8,43 +8,6 @@ parallelism (one task per topic-partition) are built in.
 The connector jar (spark-sql-kafka) is not bundled with pip pyspark, so
 this module only *wires options*; ``kafka_line_stream`` raises a clear
 error when the connector is missing rather than an opaque ClassNotFound.
-
-Environment re-probes (per-round standing check for an e2e path):
-2026-08-13 r4: no spark-sql-kafka/kafka-clients jar on disk, nothing
-listening on :9092, no grpcio/confluent_kafka in site-packages — still
-options-wiring only.
-2026-08-13 r5: re-probed — filesystem-wide find for spark-sql-kafka* /
-kafka-clients*.jar empty, :9092 connection refused, no kafka CLI tools on
-PATH.  Unchanged.
-2026-08-13 r6: re-probed (find / for the jars, :9092 connect, kafka CLI on
-PATH, `import PIL`): all still absent.  Unchanged; the wire-codec path
-(sinks/kafkawire.py) remains the drivable stand-in.
-2026-08-14 r6 (second session): re-probed jars / :9092 / PIL /
-google.protobuf (the transformWithState dependency): all still absent.
-2026-08-14 r7: re-probed (filesystem-wide find for spark-sql-kafka* /
-kafka-clients*.jar, `import PIL`, `import google.protobuf`, kafka-python):
-all still absent.  Unchanged.
-2026-08-14 r8: re-probed (pyspark/jars grep for kafka, kafka CLI on PATH,
-`import PIL`, `import google.protobuf`): all still absent.  Unchanged.
-2026-08-14 r9: re-probed (spark-sql-kafka* glob, :9092 connect refused,
-`import PIL`, `import google.protobuf`): all still absent.  Unchanged;
-the transformWithState e2e stays auto-skipped, the wire-codec path
-stays the drivable Kafka stand-in, stdlib media kernels stay the decode
-surface.
-2026-08-15 r9 (second session): re-probed (spark-sql-kafka* recursive
-glob under /opt, `import PIL` / `import google.protobuf` /
-`import kafka`): all still absent.  Unchanged.
-2026-08-15 r10: re-probed (filesystem-wide find for spark-sql-kafka* /
-kafka-clients*.jar, pyspark/jars listing, :9092 connect refused,
-`import PIL`, `import google.protobuf`): all still absent.  Unchanged;
-same standing fallbacks.
-2026-08-15 r11: re-probed (filesystem-wide find for spark-sql-kafka* /
-kafka-clients*.jar, :9092 connect refused, kafka CLI on PATH,
-`import grpc` / `import PIL` / `import google.protobuf`): all still
-absent.  Unchanged; transformWithState e2e stays auto-skipped.  New
-this round: `import lz4` also absent, but pyarrow's bundled LZ4-frame
-codec covers the ClickHouse HTTP sink (sinks/clickhouse.py
-compress="lz4").
 """
 
 from __future__ import annotations

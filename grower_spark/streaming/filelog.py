@@ -11,21 +11,15 @@ sink.  Checkpointing makes delivery at-least-once where the reference's
 memory buffer was at-most-once (SURVEY.md §4.2); ``stop()`` on signal ≈
 the dropper chain (C3/C5).  An optional liveness HTTP endpoint mirrors C4.
 
-Two sink modes:
-
-- ``foreach_batch`` (e.g. ClickHouse): ONE streaming query over the raw
-  lines, as the reference parses each line once on its way to one bulk
-  insert (handler.go:20-39).  Its ``foreachBatch`` parses the batch once,
-  and the sink splits the result in one pass: valid rows are inserted and
-  invalid lines become dead-letter parquet parts.  The batch's time
-  (``batchTimestampMs`` from the offset log) is the fallback for empty
-  Date/DateTime values and the dead lines' ``seen_at``; it enters the
-  plan so that the generated code, once compiled, serves every batch.
-- parquet files (no ``foreach_batch``): the typed rows go to a file sink
-  and, with ``deadletter_path``, the invalid lines to a second query's
-  file sink.  Each query parses every line and recompiles its parse code
-  every batch (``current_timestamp()`` is a new literal in each); the two
-  file sinks keep their own exactly-once metadata logs.
+Every configuration runs ONE streaming query over the raw lines, as the
+reference parses each line once on its way to one bulk insert
+(handler.go:20-39).  Its ``foreachBatch`` parses the batch once, and the
+sink (``ClickHouseSink``, or ``ParquetSink`` by default) splits the result
+in one pass: valid rows are written and invalid lines become dead-letter
+parquet parts.  The batch's time (``batchTimestampMs`` from the offset
+log) is the fallback for empty Date/DateTime values and the dead lines'
+``seen_at``; it enters the plan so that the generated code, once
+compiled, serves every batch.
 """
 
 from __future__ import annotations
@@ -45,8 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grower_spark.config import PipelineConfig
 from grower_spark.plans.pipeline import LogPipeline
-from grower_spark.sinks.deadletter import DeadLetterPart, deadletter_writer
-from grower_spark.sinks.files import file_stream_writer
+from grower_spark.sinks.deadletter import DeadLetterPart
+from grower_spark.sinks.files import ParquetSink
 from grower_spark.sources.file import stream_lines
 
 log = logging.getLogger(__name__)
@@ -62,19 +56,29 @@ def batch_timestamp_ms(checkpoint: str, batch_id: int) -> int:
         return int(json.loads(fh.readline())["batchTimestampMs"])
 
 
+def _refuse_file_sink_dir(path: str, what: str) -> None:
+    """Raise if a streaming file sink wrote ``path``: Spark reads such a
+    directory through the sink's ``_spark_metadata`` log alone, so parts
+    written there would never be read."""
+    if os.path.exists(os.path.join(path, "_spark_metadata")):
+        raise ValueError(
+            f"{what} directory {path} was written by a streaming file sink "
+            "(it holds _spark_metadata); readers would not see new parts "
+            "there: use a new directory")
+
+
 @dataclass
 class FileLogRunner:
     """The ingest topology: a line stream (the rotation directory, or
     ``lines_df``) parsed by the config's ``LogPipeline`` into a sink.
 
-    With ``foreach_batch`` it runs one query, ``filelog-main``, over the
-    raw lines.  Each batch is parsed once and handed over whole; with
-    ``deadletter_path`` the callable is called as ``foreach_batch(parsed,
-    batch_id, deadletter=DeadLetterPart(...))`` and writes both sides
+    It runs one query, ``filelog-main``, over the raw lines.  Each batch
+    is parsed once and handed over whole; with ``deadletter_path`` the
+    sink is called as ``foreach_batch(parsed, batch_id,
+    deadletter=DeadLetterPart(...))`` and writes both sides
     (``ClickHouseSink.foreach_batch()`` does), without it as
-    ``foreach_batch(valid_rows, batch_id)``.  Without ``foreach_batch`` it
-    writes parquet: ``filelog-main`` plus, with ``deadletter_path``, a
-    second query ``filelog-deadletter``.
+    ``foreach_batch(valid_rows, batch_id)``.  ``foreach_batch`` defaults
+    to ``ParquetSink(output_path).foreach_batch()``.
     """
 
     spark: SparkSession
@@ -105,57 +109,28 @@ class FileLogRunner:
         pipeline = LogPipeline(self.config)
         checkpoint = os.path.join(self.checkpoint_root, "main")
 
-        if self.foreach_batch is not None:
-            writer = lines.writeStream.foreachBatch(
-                self._parse_batch(pipeline, checkpoint)
-            ).option("checkpointLocation", checkpoint)
-            if self.available_now:
-                writer = writer.trigger(availableNow=True)
-            else:
-                writer = writer.trigger(
-                    processingTime=f"{self.scrape_interval_seconds} seconds"
-                )
-            self.queries.append(writer.queryName("filelog-main").start())
-            return self
-
-        from grower_spark.sinks.files import pick_time_col
-
-        good, bad = pipeline.parse_with_deadletter(lines)
-        writer = file_stream_writer(
-            good,
-            self.output_path,
-            checkpoint,
-            time_col=pick_time_col(good),
-            trigger_seconds=None if self.available_now else self.scrape_interval_seconds,
-            available_now=self.available_now,
-        )
-        self.queries.append(writer.queryName("filelog-main").start())
-
-        if self.deadletter_path:
-            dl = deadletter_writer(
-                bad,
-                self.deadletter_path,
-                os.path.join(self.checkpoint_root, "deadletter"),
+        writer = lines.writeStream.foreachBatch(
+            self._parse_batch(pipeline, checkpoint)
+        ).option("checkpointLocation", checkpoint)
+        if self.available_now:
+            writer = writer.trigger(availableNow=True)
+        else:
+            writer = writer.trigger(
+                processingTime=f"{self.scrape_interval_seconds} seconds"
             )
-            if self.available_now:
-                dl = dl.trigger(availableNow=True)
-            else:
-                dl = dl.trigger(processingTime=f"{self.scrape_interval_seconds} seconds")
-            self.queries.append(dl.queryName("filelog-deadletter").start())
+        self.queries.append(writer.queryName("filelog-main").start())
         return self
 
     def _parse_batch(self, pipeline: LogPipeline, checkpoint: str) -> Callable:
-        """The ``foreachBatch`` function of the one-query mode."""
+        """The query's ``foreachBatch`` function."""
         sink = self.foreach_batch
+        if sink is None:
+            output = os.path.abspath(self.output_path)
+            _refuse_file_sink_dir(output, "output")
+            sink = ParquetSink(output).foreach_batch()
         dead = self.deadletter_path and os.path.abspath(self.deadletter_path)
         if dead:
-            if os.path.exists(os.path.join(dead, "_spark_metadata")):
-                # Spark reads such a directory through the file sink's log
-                # alone, so parts written here would never be read
-                raise ValueError(
-                    f"dead-letter directory {dead} was written by a streaming "
-                    "file sink (it holds _spark_metadata); readers would not "
-                    "see new dead-letter parts there: use a new directory")
+            _refuse_file_sink_dir(dead, "dead-letter")
             if "deadletter" not in inspect.signature(sink).parameters:
                 raise TypeError(
                     "with deadletter_path, foreach_batch must accept a "
@@ -212,8 +187,8 @@ class FileLogRunner:
                 return
             # A query that died with an error must RAISE here, exactly as
             # the blocking awaitTermination would — otherwise a crashed
-            # pipeline exits 0 (and a dead main query beside a live
-            # dead-letter query would spin forever).
+            # pipeline exits 0 (and a dead query beside a live one would
+            # spin forever).
             for q in self.queries:
                 if not q.isActive:
                     exc = q.exception()

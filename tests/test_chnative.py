@@ -72,10 +72,10 @@ class FakeNativeServer:
         self.revision = revision
         self.table_types = dict(table_types or {})
         self.fail_query_with = fail_query_with
-        # when set: after sending the insert's sample block, immediately
-        # send this exception and STOP parsing the insert stream (drain
-        # and count raw bytes until EOF) — the shape of a server that
-        # raises mid-insert (quota, oversize value) and stops reading
+        # when set: send the insert's sample block and this exception in
+        # one write, then STOP parsing the insert stream (drain and count
+        # raw bytes until EOF) — the shape of a server that raises
+        # mid-insert (quota, oversize value) and stops reading
         self.fail_insert_midstream = fail_insert_midstream
         self.drained_bytes = 0
         # when set: SELECT queries answer with this [(name, type, values)]
@@ -132,8 +132,9 @@ class FakeNativeServer:
             out += write_varint(7)
         conn.sendall(bytes(out))
 
-    def _send_exception(self, conn, code: int, name: str, msg: str) -> None:
-        conn.sendall(
+    @staticmethod
+    def _exception_packet(code: int, name: str, msg: str) -> bytes:
+        return (
             write_varint(SERVER_EXCEPTION)
             + struct.pack("<i", code)
             + write_string(name)
@@ -142,13 +143,18 @@ class FakeNativeServer:
             + b"\x00"
         )
 
-    def _send_data(self, conn, columns, method=None) -> None:
+    def _send_exception(self, conn, code: int, name: str, msg: str) -> None:
+        conn.sendall(self._exception_packet(code, name, msg))
+
+    def _data_packet(self, columns, method=None) -> bytes:
         out = write_varint(SERVER_DATA)
         if self._negotiated() >= REV_TEMPORARY_TABLES:
             out += write_string("")
         body = encode_block(columns, self._negotiated())
-        out += compress_stream(body, method) if method is not None else body
-        conn.sendall(out)
+        return out + (compress_stream(body, method) if method is not None else body)
+
+    def _send_data(self, conn, columns, method=None) -> None:
+        conn.sendall(self._data_packet(columns, method))
 
     def _send_progress(self, conn) -> None:
         rev = self._negotiated()
@@ -226,13 +232,15 @@ class FakeNativeServer:
                     # the server mirrors the query's compression choice;
                     # METHOD_LZ4 on the reply leg exercises the client's
                     # read_frame/decompress path too
-                    self._send_data(
-                        conn, sample,
-                        method=METHOD_LZ4 if compressed else None,
-                    )
-                    if self.fail_insert_midstream is not None:
-                        self._send_exception(conn,
-                                             *self.fail_insert_midstream)
+                    packet = self._data_packet(
+                        sample, method=METHOD_LZ4 if compressed else None)
+                    if self.fail_insert_midstream is None:
+                        conn.sendall(packet)
+                    else:
+                        # one send: the exception is in the client's
+                        # buffer by the time it has parsed the sample block
+                        conn.sendall(packet + self._exception_packet(
+                            *self.fail_insert_midstream))
                         while True:  # stop PARSING; drain so no RST race
                             chunk = conn.recv(65536)
                             if not chunk:

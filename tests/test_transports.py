@@ -2,6 +2,7 @@
 syslog envelope extraction, ClickHouse sink batching/retry/DDL, kafka
 framing, dead-letter persistence."""
 
+import dataclasses
 import os
 
 import pyarrow as pa
@@ -11,7 +12,8 @@ import pytest
 from grower_spark.config import PipelineConfig
 from grower_spark.plans.pipeline import LogPipeline
 from grower_spark.sinks.clickhouse import ClickHouseSink, clickhouse_ddl
-from grower_spark.sinks.deadletter import write_deadletter_batch
+from grower_spark.sinks.deadletter import DeadLetterPart, write_deadletter_batch
+from grower_spark.sinks.files import ParquetSink, pick_time_col, write_batch_files
 from grower_spark.sinks.kafka import frame_for_kafka, kafka_writer_options
 from grower_spark.sources.kafka import kafka_reader_options
 from grower_spark.sources.rotate import Rotator, clear_backup_files, stamp_name
@@ -256,19 +258,24 @@ def _write_logs(logs, n_files):
         ]) + "\n")
 
 
-def test_clickhouse_topology_compiles_its_code_once(spark, tmp_path):
-    """The ClickHouse topology runs one query whose generated code is the
-    same in every micro-batch: after the first file, Spark's codegen
-    compile count stays flat (the batch's time enters the plan as a string
-    behind a barrier, not as an inlined timestamp literal)."""
+@pytest.mark.parametrize("sink", ["clickhouse", "parquet"])
+def test_clickhouse_topology_compiles_its_code_once(spark, tmp_path, sink):
+    """The ingest topology runs one query whose generated code is the
+    same in every micro-batch, whichever sink it writes to: after the
+    first file, Spark's codegen compile count stays flat (the batch's time
+    enters the plan as a string behind a barrier, not as an inlined
+    timestamp literal)."""
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    out = tmp_path / "inserts"
+    out = tmp_path / "out"
     out.mkdir()
     out_str = str(out)
-    write = ClickHouseSink(
-        table="db.t", columns=["remote_addr", "time_local", "status"],
-        client_factory=lambda: FileBackedClient(out_str),
-    ).foreach_batch()
+    if sink == "clickhouse":
+        write = ClickHouseSink(
+            table="db.t", columns=["remote_addr", "time_local", "status"],
+            client_factory=lambda: FileBackedClient(out_str),
+        ).foreach_batch()
+    else:
+        write = ParquetSink(out_str).foreach_batch()
     compiles = []
 
     def counted(batch_df, batch_id, deadletter=None):
@@ -287,30 +294,139 @@ def test_clickhouse_topology_compiles_its_code_once(spark, tmp_path):
     assert len(runner.queries) == 1
     assert len(compiles) == 4
     assert compiles[1:] == [compiles[0]] * 3
-    landed = [line for f in out.iterdir() for line in f.read_text().splitlines()]
-    assert len(landed) == 8
+    if sink == "clickhouse":
+        landed = [line for f in out.iterdir() for line in f.read_text().splitlines()]
+        assert len(landed) == 8
+    else:
+        assert spark.read.parquet(out_str).count() == 8
+    assert spark.read.parquet(str(tmp_path / "dl")).count() == 4
 
 
 def test_clickhouse_topology_refuses_file_sink_deadletter_dir(spark, tmp_path):
-    """A dead-letter directory a streaming file sink wrote is read through
-    its ``_spark_metadata`` log only, so new parts there would be invisible:
-    ``start()`` refuses it before any query starts."""
-    dl = tmp_path / "dl"
-    (dl / "_spark_metadata").mkdir(parents=True)
+    """A directory a streaming file sink wrote is read through its
+    ``_spark_metadata`` log only, so new parts there would be invisible:
+    ``start()`` refuses such a dead-letter directory, and such a parquet
+    output directory, before any query starts."""
     (tmp_path / "logs").mkdir()
+    clickhouse = ClickHouseSink(
+        table="db.t", columns=["status"],
+        client_factory=lambda: FlakyClient()).foreach_batch()
     active = len(spark.streams.active)
-    runner = FileLogRunner(
+    for written, sink in (("dl", clickhouse), ("out", None)):
+        (tmp_path / written / "_spark_metadata").mkdir(parents=True)
+        runner = FileLogRunner(
+            spark, PipelineConfig.from_dict(CONFIG),
+            logs_dir=str(tmp_path / "logs"), output_path=str(tmp_path / "out"),
+            checkpoint_root=str(tmp_path / "ckpt"),
+            deadletter_path=str(tmp_path / written) if written == "dl" else None,
+            foreach_batch=sink, available_now=True,
+        )
+        with pytest.raises(ValueError, match="_spark_metadata"):
+            runner.start()
+        assert runner.queries == [] and len(spark.streams.active) == active
+
+
+def _run_parquet(spark, tmp_path, foreach_batch=None):
+    """The CLI's topology: FileLogRunner writing parquet to ``out`` and
+    dead lines to ``dl``, draining ``logs``."""
+    FileLogRunner(
         spark, PipelineConfig.from_dict(CONFIG),
-        logs_dir=str(tmp_path / "logs"), output_path="",
-        checkpoint_root=str(tmp_path / "ckpt"), deadletter_path=str(dl),
-        foreach_batch=ClickHouseSink(
-            table="db.t", columns=["status"],
-            client_factory=lambda: FlakyClient()).foreach_batch(),
-        available_now=True,
-    )
-    with pytest.raises(ValueError, match="_spark_metadata"):
-        runner.start()
-    assert runner.queries == [] and len(spark.streams.active) == active
+        logs_dir=str(tmp_path / "logs"), output_path=str(tmp_path / "out"),
+        checkpoint_root=str(tmp_path / "ckpt"),
+        deadletter_path=str(tmp_path / "dl"),
+        foreach_batch=foreach_batch, available_now=True,
+    ).start().await_termination(timeout=120)
+
+
+def _parquet_rows(spark, path) -> list:
+    return sorted(tuple(r) for r in spark.read.parquet(str(path)).collect())
+
+
+def test_parquet_topology_replayed_batch(spark, tmp_path):
+    """A batch replayed after a crash (its commit record deleted) writes
+    its typed parts and its dead-letter part again in place: each row and
+    each dead line is read once, with the same fallback time as before."""
+    _write_logs(tmp_path / "logs", 3)
+    _run_parquet(spark, tmp_path)
+    rows, dead = _parquet_rows(spark, tmp_path / "out"), _parquet_rows(spark, tmp_path / "dl")
+    assert len(rows) == 6 and len(dead) == 3
+    commits = tmp_path / "ckpt" / "main" / "commits"
+    os.remove(commits / "2")
+    os.remove(commits / ".2.crc")  # the checksum file would block the rewrite
+    _run_parquet(spark, tmp_path)
+    assert (commits / "2").exists()  # the batch ran again
+    assert _parquet_rows(spark, tmp_path / "out") == rows
+    assert _parquet_rows(spark, tmp_path / "dl") == dead
+
+
+@dataclasses.dataclass(frozen=True)
+class CrashOnceDeadLetterPart(DeadLetterPart):
+    """A dead-letter part whose first write, across processes, raises:
+    the task dies after it wrote its typed parts."""
+
+    flag: str = ""
+
+    def write(self, lines) -> None:
+        if not os.path.exists(self.flag):
+            open(self.flag, "w").close()
+            raise RuntimeError("crash before the dead-letter part")
+        super().write(lines)
+
+
+def test_parquet_topology_task_crash_before_deadletter(spark, tmp_path):
+    """A task that crashes after writing its typed parts and before its
+    dead-letter part fails the batch; on restart the batch is replayed and
+    every row and dead line is read once."""
+    _write_logs(tmp_path / "logs", 3)
+    write = ParquetSink(str(tmp_path / "out")).foreach_batch()
+    flag = str(tmp_path / "crashed")
+
+    def crashing(batch_df, batch_id, deadletter=None):
+        write(batch_df, batch_id, deadletter=CrashOnceDeadLetterPart(
+            **dataclasses.asdict(deadletter), flag=flag))
+
+    with pytest.raises(Exception, match="crash before the dead-letter part"):
+        _run_parquet(spark, tmp_path, foreach_batch=crashing)
+    assert os.path.exists(flag)
+    # the crashed batch's typed rows are visible until the replay
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 2
+    assert not (tmp_path / "dl").exists()
+    _run_parquet(spark, tmp_path, foreach_batch=crashing)
+    out = spark.read.parquet(str(tmp_path / "out"))
+    # per file k: status 200 + k, and 200 for the line whose time is "-"
+    assert sorted(r["status"] for r in out.collect()) == [200, 200, 200, 200, 201, 202]
+    assert sorted(r["line"] for r in spark.read.parquet(str(tmp_path / "dl")).collect()) \
+        == [f"{BAD} {k}" for k in range(3)]
+
+
+def test_parquet_sink_matches_batch_writer(spark, tmp_path):
+    """``ParquetSink`` writes what ``write_batch_files`` writes: the same
+    schema (``insert_month`` read back as int), the same rows, NULL times
+    under Spark's default partition, and no partitioning without a time
+    column."""
+    import datetime as dt
+    import decimal
+
+    df = spark.createDataFrame([
+        (decimal.Decimal(2**64 - 1), 1, 2, dt.date(2022, 7, 1), 1.5,
+         dt.datetime(2022, 7, 1, 3), 200),
+        (decimal.Decimal(0), -1, -2, None, None, None, None),
+        (decimal.Decimal(5), 3, 4, dt.date(2022, 8, 9), 2.5,
+         dt.datetime(2022, 8, 9, 3), 404),
+    ], "u64 decimal(20,0), i8 tinyint, i16 smallint, d date, f float, "
+       "time_local timestamp, status smallint").repartition(2)
+    for name, frame in (("timed", df), ("untimed", df.drop("d", "time_local"))):
+        batch, sink = tmp_path / name / "batch", tmp_path / name / "sink"
+        write_batch_files(frame, str(batch), time_col=pick_time_col(frame))
+        ParquetSink(str(sink)).foreach_batch()(frame, 0)
+        want, got = spark.read.parquet(str(batch)), spark.read.parquet(str(sink))
+        assert got.schema == want.schema
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert sorted(p.name for p in (tmp_path / "timed" / "sink").iterdir()) == [
+        "insert_month=202207", "insert_month=202208",
+        "insert_month=__HIVE_DEFAULT_PARTITION__"]
+    assert all(p.name.startswith("part-0-")
+               for p in (tmp_path / "untimed" / "sink").iterdir())
 
 
 def test_clickhouse_ddl():
@@ -499,6 +615,77 @@ def test_cli_syslog_e2e(spark, tmp_path, capsys):
     assert good.count() == 3
     assert {r["status"] for r in good.select("status").collect()} == {444}
     assert spark.read.parquet(dl).count() == 1
+
+
+def test_cli_kafkalog_connector_path_runs_the_ingest_topology(
+        spark, tmp_path, monkeypatch):
+    """The connector path feeds Kafka's line stream to the same one-query
+    ``FileLogRunner`` as every other transport: typed rows land partitioned
+    by month, the bad line lands in --dead-letter, and SIGTERM stops it.
+    ``kafka_line_stream`` is replaced by a text stream over a directory,
+    so no connector jar is needed."""
+    import glob
+    import signal
+    import threading
+    import time
+
+    from conftest import FIXTURES
+    from test_template import SAMPLE_LINE
+
+    import grower_spark.sources.kafka as kafka
+    from grower_spark.cli import main
+
+    topic = tmp_path / "topic"
+    topic.mkdir()
+    (topic / "records.txt").write_text(
+        "\n".join([SAMPLE_LINE, SAMPLE_LINE, "not an access line"]) + "\n")
+    asked = {}
+
+    def line_stream(spark, **options):
+        asked.update(options)
+        return spark.readStream.text(str(topic))
+
+    monkeypatch.setattr(kafka, "kafka_line_stream", line_stream)
+    out, dl = tmp_path / "out", tmp_path / "dl"
+    handlers = {s: signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)}
+
+    def stop_when_landed():
+        deadline = time.monotonic() + 120
+        installed = False
+        while time.monotonic() < deadline:
+            installed = signal.getsignal(signal.SIGTERM) is not handlers[signal.SIGTERM]
+            if installed and glob.glob(f"{out}/insert_month=*/part-*.parquet") \
+                    and glob.glob(f"{dl}/seen_date=*/part-*.parquet"):
+                break
+            time.sleep(0.5)
+        if installed:
+            os.kill(os.getpid(), signal.SIGTERM)
+        else:  # SIGTERM would end the test process: stop the queries instead
+            for q in spark.streams.active:
+                q.stop()
+
+    stopper = threading.Thread(target=stop_when_landed, daemon=True)
+    stopper.start()
+    try:
+        rc = main([
+            "kafkalog",
+            "--config", os.path.join(FIXTURES, "sample_test.yaml"),
+            "--brokers", "127.0.0.1:9092", "--topic", "logs",
+            "--output", str(out), "--dead-letter", str(dl),
+            "--checkpoint", str(tmp_path / "ckpt"), "--scrape-interval", "1",
+        ])
+    finally:
+        stopper.join(timeout=130)
+        for s, h in handlers.items():
+            signal.signal(s, h)
+    assert not stopper.is_alive()
+    assert rc == 0
+    assert asked == {"brokers": "127.0.0.1:9092", "topic": "logs"}
+    good = spark.read.parquet(str(out))
+    assert [r["status"] for r in good.collect()] == [444, 444]
+    assert {r["insert_month"] for r in good.select("insert_month").collect()} == {202207}
+    assert [(r["line"], r["source"]) for r in spark.read.parquet(str(dl)).collect()] \
+        == [("not an access line", "filelog")]
 
 
 def test_stop_survives_poisoned_query_handle(caplog):
