@@ -4,6 +4,24 @@ Local testing runs ``local[N]``; at production scale the same settings hold
 (AQE, skew-join handling) with partition counts sized by the cluster.  The
 reference's knobs map: ``--parallelism`` (cmd/filelog/main.go:49-54) ->
 ``shuffle.partitions`` / default parallelism; everything else is per-sink.
+
+Two settings cut the fixed CPU that every streaming micro-batch pays:
+
+- ``spark.python.daemon.module`` starts Python workers from
+  ``grower_spark.worker_daemon``.  PySpark's worker calls
+  ``importlib.invalidate_caches()`` before every task, and before CPython
+  3.12 that re-reads the directory of every zip archive on the worker's
+  path (about 0.2 s of CPU per task); the daemon keeps an archive's index
+  while the archive is unchanged.  It is a launch-time setting.
+- ``spark.sql.streaming.checkpointFileManagerClass`` writes checkpoint
+  logs (offsets, commits, source logs) through Spark's
+  ``FileSystemBasedCheckpointFileManager``.  The default FileContext-based
+  manager, on Hadoop's local file system without the native library,
+  starts ``readlink`` and ``chmod`` processes for every log write (rename
+  link checks, ``setPermission``).  The on-disk layout is the same
+  (``offsets/<n>``, ``commits/<n>``, ``.crc`` files), so existing
+  checkpoints resume as they are.  It is a runtime SQL conf, which
+  ``tune_session`` sets too.
 """
 
 from __future__ import annotations
@@ -11,6 +29,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(app_name: str = "grower-spark", cpus: int | None = None) -> SparkSession:
@@ -39,6 +62,8 @@ def get_spark(app_name: str = "grower-spark", cpus: int | None = None) -> SparkS
         # by default; read as long and convert (io_tables.load_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "grower_spark.worker_daemon")
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     return builder.getOrCreate()
@@ -77,8 +102,11 @@ def stream_state_partitions(spark: SparkSession, input_bytes: int) -> int:
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable conf on an externally created session
-    (the correctness driver owns its own SparkSession)."""
+    (the correctness driver owns its own SparkSession).  The worker daemon
+    (``spark.python.daemon.module``) is a launch-time setting, which a
+    live session cannot take; the checkpoint file manager is set here."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     return spark

@@ -233,7 +233,9 @@ class StreamMetrics:
     The reference left "sending metrics to prometheus" as a TODO
     (README.md:27-31); here it's a ``StreamingQueryListener`` that
     accumulates per-query totals from progress events plus last-batch
-    gauges, rendered by the liveness server's ``/metrics`` endpoint.
+    gauges, rendered by the liveness server's ``/metrics`` endpoint.  The
+    last batch's time per phase (``durationMs``: ``walCommit``,
+    ``addBatch``, ``commitOffsets``, ...) is a gauge labelled by phase.
 
     Register with ``spark.streams.addListener(metrics.listener())``.
     """
@@ -244,13 +246,24 @@ class StreamMetrics:
         self.batches_total: dict[str, int] = {}
         self.last_batch_rows: dict[str, int] = {}
         self.last_rows_per_sec: dict[str, float] = {}
+        self.last_batch_duration_s: dict[str, dict[str, float]] = {}
 
-    def record(self, name: str, num_input_rows: int, rows_per_sec: float) -> None:
+    def record(
+        self,
+        name: str,
+        num_input_rows: int,
+        rows_per_sec: float,
+        duration_ms: Optional[dict] = None,
+    ) -> None:
         with self._lock:
             self.rows_total[name] = self.rows_total.get(name, 0) + num_input_rows
             self.batches_total[name] = self.batches_total.get(name, 0) + 1
             self.last_batch_rows[name] = num_input_rows
             self.last_rows_per_sec[name] = rows_per_sec
+            if duration_ms is not None:
+                self.last_batch_duration_s[name] = {
+                    phase: ms / 1000.0 for phase, ms in duration_ms.items()
+                }
 
     def listener(self):
         from pyspark.sql.streaming import StreamingQueryListener
@@ -267,6 +280,7 @@ class StreamMetrics:
                     p.name or str(p.id),
                     int(p.numInputRows or 0),
                     float(p.processedRowsPerSecond or 0.0),
+                    dict(p.durationMs or {}),
                 )
 
             def onQueryIdle(self, event):  # noqa: N802
@@ -294,6 +308,13 @@ class StreamMetrics:
                     "gauge",
                     self.last_rows_per_sec,
                 )
+                + ["# TYPE grower_stream_last_batch_duration_seconds gauge"]
+                + [
+                    f'grower_stream_last_batch_duration_seconds'
+                    f'{{query="{name}",phase="{phase}"}} {phases[phase]}'
+                    for name, phases in sorted(self.last_batch_duration_s.items())
+                    for phase in sorted(phases)
+                ]
             )
         return "\n".join(lines) + "\n"
 

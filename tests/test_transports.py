@@ -11,6 +11,7 @@ import pytest
 
 from grower_spark.config import PipelineConfig
 from grower_spark.plans.pipeline import LogPipeline
+from grower_spark.session import CHECKPOINT_FILE_MANAGER
 from grower_spark.sinks.clickhouse import ClickHouseSink, clickhouse_ddl
 from grower_spark.sinks.deadletter import DeadLetterPart, write_deadletter_batch
 from grower_spark.sinks.files import ParquetSink, pick_time_col, write_batch_files
@@ -88,6 +89,65 @@ def test_filelog_streaming_resumes_from_checkpoint(spark, tmp_path):
     FileLogRunner(**kwargs).start().await_termination(timeout=120)
     out = spark.read.parquet(str(tmp_path / "out"))
     assert sorted(r["status"] for r in out.collect()) == [200, 201]
+
+
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _offset_log_manager(query) -> str:
+    return (query._jsq.streamingQuery().offsetLog().fileManager()
+            .getClass().getName())
+
+
+def test_filelog_checkpoint_logs_skip_file_context(spark, tmp_path):
+    """The session writes checkpoint logs through Spark's FileSystem-based
+    manager, whose renames and creates start no ``readlink``/``chmod``
+    process on the local file system."""
+    (tmp_path / "logs").mkdir()
+    runner = FileLogRunner(
+        spark, PipelineConfig.from_dict(CONFIG),
+        logs_dir=str(tmp_path / "logs"), output_path=str(tmp_path / "out"),
+        checkpoint_root=str(tmp_path / "ckpt"),
+    ).start()
+    try:
+        assert _offset_log_manager(runner.queries[0]) == CHECKPOINT_FILE_MANAGER
+    finally:
+        runner.stop()
+
+
+def test_file_context_checkpoint_resumes_under_filesystem_manager(spark, tmp_path):
+    """A checkpoint written by the FileContext-based manager (Spark's
+    default) resumes under the session's manager: the same files, and
+    every row and dead line lands once."""
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    (logs / "a.growerlog").write_text(LINE + "\n" + BAD + "\n")
+    kwargs = dict(
+        spark=spark, config=PipelineConfig.from_dict(CONFIG),
+        logs_dir=str(logs), output_path=str(tmp_path / "out"),
+        checkpoint_root=str(tmp_path / "ckpt"),
+        deadletter_path=str(tmp_path / "dl"), available_now=True,
+    )
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    spark.conf.set(key, FILE_CONTEXT_MANAGER)
+    try:
+        old = FileLogRunner(**kwargs).start()
+        old.await_termination(timeout=120)
+    finally:
+        spark.conf.set(key, CHECKPOINT_FILE_MANAGER)
+    assert _offset_log_manager(old.queries[0]) == FILE_CONTEXT_MANAGER
+    (logs / "b.growerlog").write_text(LINE.replace(" 200", " 201") + "\n")
+    new = FileLogRunner(**kwargs).start()
+    new.await_termination(timeout=120)
+    assert _offset_log_manager(new.queries[0]) == CHECKPOINT_FILE_MANAGER
+    out = spark.read.parquet(str(tmp_path / "out"))
+    assert sorted(r["status"] for r in out.collect()) == [200, 201]
+    assert [r["line"] for r in spark.read.parquet(str(tmp_path / "dl")).collect()] == [BAD]
+    assert sorted(os.listdir(tmp_path / "ckpt" / "main" / "commits")) == [
+        ".0.crc", ".1.crc", "0", "1"]
 
 
 def test_rotator_and_retention(tmp_path):
@@ -536,6 +596,34 @@ def test_metrics_listener_accumulates_from_stream(spark, tmp_path):
         assert "metrics-e2e" in metrics.render()
     finally:
         spark.streams.removeListener(listener)
+
+
+def test_metrics_last_batch_duration_per_phase(spark, tmp_path):
+    """The last batch's ``durationMs`` reaches ``/metrics`` as one gauge
+    per phase, including the offset and commit log writes."""
+    import time
+
+    from grower_spark.streaming.filelog import StreamMetrics
+
+    metrics = StreamMetrics()
+    listener = metrics.listener()
+    spark.streams.addListener(listener)
+    try:
+        _write_logs(tmp_path / "logs", 1)
+        FileLogRunner(
+            spark, PipelineConfig.from_dict(CONFIG),
+            logs_dir=str(tmp_path / "logs"), output_path=str(tmp_path / "out"),
+            checkpoint_root=str(tmp_path / "ckpt"), available_now=True,
+        ).start().await_termination(timeout=120)
+        deadline = time.time() + 15  # listener events are async
+        while time.time() < deadline and "filelog-main" not in metrics.last_batch_duration_s:
+            time.sleep(0.2)
+        body = metrics.render()
+    finally:
+        spark.streams.removeListener(listener)
+    assert "# TYPE grower_stream_last_batch_duration_seconds gauge" in body
+    for phase in ("walCommit", "addBatch", "commitOffsets"):
+        assert f'grower_stream_last_batch_duration_seconds{{query="filelog-main",phase="{phase}"}} ' in body
 
 
 def test_cli_ddl_and_help(tmp_path, capsys):
